@@ -6,19 +6,21 @@ import graft.operators.NeighborJoin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import scala.util.Try
 
 /** Which graph-connectivity semantics clusters use (SURVEY §2.7 G2/G3):
   * CC absorbs border points into the cluster of the core that reaches them;
   * SCC leaves border points as singleton components (→ noise). `CcGraphX`
   * is the Pregel implementation, kept as an independent cross-check.
+  * Every mode labels a component by one of its member vertex ids, which is
+  * what lets [[Dbscan.sweep]] cluster all radii in one batched pass
+  * whatever the mode.
   */
 sealed trait ClusterMode
 case object Cc extends ClusterMode
 case object CcGraphX extends ClusterMode
 /** Exact SCC via the DBSCAN-graph specialization (GraphAlgs.dbscanScc). */
 case object Scc extends ClusterMode
-/** The reference's literal bounded-iteration GraphX SCC (SCC.py:174). */
-case class SccGraphX(maxIter: Int = 10) extends ClusterMode
 
 /** One DBSCAN run's outputs. `assignments` is per input id:
   * (id, qi, component nullable, is_noise, an_qi nullable) — `an_qi` is the
@@ -57,10 +59,9 @@ object Dbscan {
 
   /** Above this many clusters the kernel noise-assign's component-decode
     * literal array would bloat the plan (and its exhaustive O(k) per-row
-    * scan starts to bite), so [[run]] and [[sweepRecordsBatched]] switch
-    * to the pruned-exact argmin ([[withPrunedNearest]]) up to
-    * the [[MaxAssignElements]] budget, and to the broadcast-join argmin
-    * beyond. */
+    * scan starts to bite), so [[cluster]]'s noise assign switches to the
+    * pruned-exact argmin ([[withPrunedNearest]]) up to the
+    * [[MaxAssignElements]] budget, and to the probe join beyond. */
   private[graft] val KernelAssignMaxClusters = 8192
 
   /** Element budget for the driver-collected centroid matrix behind the
@@ -92,9 +93,9 @@ object Dbscan {
     * over indices 0..n-1 in ascending-component order (kernel ties →
     * lowest index = lowest component id, the min-struct tiebreak) and the
     * index is decoded through a sorted literal array. A null vector yields
-    * null in both columns. Shared by [[run]]'s noise assign and
-    * [[sweepRecordsBatched]]'s per-ε noise stats so the two paths cannot
-    * drift. `sorted` MUST be ascending by component id. */
+    * null in both columns. [[cluster]]'s noise assign for up to
+    * [[KernelAssignMaxClusters]] clusters. `sorted` MUST be ascending by
+    * component id. */
   private[graft] def withKernelNearest(df: DataFrame, qiCol: String,
                                 sorted: IndexedSeq[(Long, Array[Double])],
                                 ccName: String, dName: String): DataFrame = {
@@ -124,36 +125,48 @@ object Dbscan {
       .withColumn(dName, col("__pn.d"))
       .drop("__pn")
 
-  /** Run DBSCAN over points identified by a unique Long `idCol` with
-    * `array<double>` coordinates `qiCol`.
-    *
-    * @param weightCol multiplicity column: the reference runs its cartesian
-    *   over the raw (duplicate-bearing) rows, so duplicates count toward
-    *   minPts; value-collapsed callers pass the duplicate count here.
-    * @param k  k-anonymity parameter: components with fewer than k distinct
-    *   members are noise (DBSCAN.py:176-179). Usually == minPts.
-    * @param pairsOpt optional precomputed ε-pair set (the epsJoinGrid
-    *   output over (id, qi, w) for the SAME points and eps) — callers that
-    *   already hold the ε-graph (e.g. the gate registry's per-dir cache)
-    *   pass it here so the join isn't rebuilt; it is NOT unpersisted.
+  /** The ε-blocks one [[cluster]] pass labels at once: block `ei` is the
+    * ε-graph at radius `eps(ei)`, its vertex ids namespaced to
+    * `ei·span + (id − minId)`. No edge crosses a block, so the components
+    * of the disjoint union restricted to a block are exactly that
+    * radius's components, and every component id (a member vertex id in
+    * every [[ClusterMode]]) names its block. `span == 0` is a single
+    * block whose ids stay as they are. */
+  private final case class Blocks(eps: Seq[Double], minId: Long = 0L,
+                                  span: Long = 0L) {
+    def vertex(ei: Column, id: Column): Column =
+      if (span == 0) id else ei * span + (id - minId)
+    /** The block of a namespaced id column. `/` on longs is double
+      * division in Spark SQL — DIV keeps the quotient exact. One block is
+      * a cast constant, not a bare literal: an integer literal in GROUP BY
+      * is read as a column ordinal. */
+    def of(idCol: String): Column =
+      if (span == 0) lit(0L).cast("int")
+      else expr(s"CAST($idCol DIV ${span}L AS INT)")
+  }
+
+  /** A [[cluster]] pass's outputs. `labeled` (id, qi, component; null =
+    * noise) and `centroids` (component, centroid, n_members) are persisted
+    * and the caller's to unpersist; `nearest` (id, qi, cc, an_err) is
+    * every noise row with its nearest same-block centroid, null where the
+    * block has no cluster. Ids and components are namespaced. */
+  private final case class Clustered(labeled: DataFrame, centroids: DataFrame,
+                                     nearest: DataFrame,
+                                     records: Seq[SweepRecord])
+
+  /** The DBSCAN pipeline over ε-tagged pairs (ei, a_id, a_w, b_id, b_w),
+    * each step written once for [[run]] (one block) and [[sweep]] (every
+    * radius in one pass): weighted core rule, core → neighbour edges,
+    * components, k-anonymity, centroids, per-block stats in one action,
+    * and the noise → nearest-centroid assign. `pts` is (id, qi) with
+    * unique ids. Records carry `seconds = 0`.
     */
-  def run(points: DataFrame, idCol: String, qiCol: String, eps: Double,
-          minPts: Int, k: Int, mode: ClusterMode = Cc,
-          weightCol: Option[String] = None, blockDims: Int = 2,
-          pairsOpt: Option[DataFrame] = None): DbscanModel = {
-    val spark = points.sparkSession
-    val dim = points.select(size(col(qiCol))).head().getInt(0)
-
-    val w = weightCol.map(col).getOrElse(lit(1L)).cast("long")
-    val pts = points.select(col(idCol).cast("long").as("id"),
-      col(qiCol).as("qi"), w.as("w"))
-
-    // ε-neighborhood pairs (self included) via grid blocking; reused by the
-    // core-point test and the edge list, so persist across those jobs.
-    val ownPairs = pairsOpt.isEmpty
-    val pairs = pairsOpt.getOrElse(NeighborJoin
-      .epsJoinGrid(pts.select("id", "qi", "w"), "id", "qi", eps, blockDims)
-      .persist(StorageLevel.MEMORY_AND_DISK))
+  private def cluster(pts: DataFrame, tagged: DataFrame, blocks: Blocks,
+                      minPts: Int, k: Int, mode: ClusterMode): Clustered = {
+    val dim = pts.select(size(col("qi"))).head().getInt(0)
+    val pairs = tagged.select(
+      blocks.vertex(col("ei"), col("a_id")).as("a_id"), col("a_w"),
+      blocks.vertex(col("ei"), col("b_id")).as("b_id"), col("b_w"))
 
     // Core test: the reference's cartesian keys pairs on the point VALUE,
     // so a point with c duplicate copies sees each neighbor c times — its
@@ -171,20 +184,23 @@ object Dbscan {
 
     val comp = mode match {
       case Cc => ConnectedComponents.run(edges)
-      case CcGraphX => GraphAlgs.connectedComponents(spark, edges)
+      case CcGraphX => GraphAlgs.connectedComponents(pts.sparkSession, edges)
       case Scc => GraphAlgs.dbscanScc(edges)
-      case SccGraphX(n) => GraphAlgs.stronglyConnectedComponents(spark, edges, n)
     }
 
-    // Every vertex in the edge graph has a component; isolated points do
-    // not and are immediately noise. Components with < k distinct members
-    // are dissolved into noise too (strictly-less, DBSCAN.py:176).
-    val withComp = pts.join(comp, pts("id") === comp("id"), "left")
-      .select(pts("id"), col("qi"), col("w"), col("component"))
+    // Every point appears in every block. A vertex outside the edge graph
+    // has no component and is immediately noise; components with < k
+    // distinct members are dissolved into noise too (strictly-less,
+    // DBSCAN.py:176).
+    val verts = pts
+      .select(explode(sequence(lit(0), lit(blocks.eps.length - 1))).as("ei"),
+        col("id"), col("qi"))
+      .select(blocks.vertex(col("ei"), col("id")).as("id"), col("qi"))
+    val withComp = verts.join(comp, Seq("id"), "left")
     val sizes = withComp.where(col("component").isNotNull)
       .groupBy("component").agg(count(lit(1)).as("csize"))
     val labeled = withComp.join(sizes, Seq("component"), "left")
-      .select(col("id"), col("qi"), col("w"),
+      .select(col("id"), col("qi"),
         when(col("csize") >= k, col("component")).as("component"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -192,12 +208,11 @@ object Dbscan {
     // (calc_error, DBSCAN.py:86-100); one partial-aggregable pass.
     val dimAvgs = (0 until dim).map(i =>
       avg(element_at(col("qi"), i + 1)).as(s"c$i"))
-    // Persisted BEFORE first use: the kernel noise-assign collects this
-    // aggregate for an_err and re-joins it for an_qi — without the persist
+    // Persisted BEFORE first use: the noise assign collects this aggregate
+    // for an_err and run() re-joins it for an_qi — without the persist
     // those are two jobs whose avg partial-combine order may differ, and
     // an_qi could drift an ulp from the centroid that produced an_err.
-    // One materialization keeps an_err == L1(qi, an_qi) exact. Lives as
-    // long as the model (like `assignments`); O(nClusters) rows.
+    // One materialization keeps an_err == L1(qi, an_qi) exact.
     val centroids = labeled.where(col("component").isNotNull)
       .groupBy("component")
       .agg(dimAvgs.head, dimAvgs.tail :+ count(lit(1)).as("n_members"): _*)
@@ -206,96 +221,152 @@ object Dbscan {
         col("n_members"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val members = labeled.where(col("component").isNotNull)
-    val noise = labeled.where(col("component").isNull)
-    // nClusters + nNoise + clusterError in ONE action (round 16, guide
-    // §2.6: the three aggregates were sequential driver-synchronous jobs
-    // over the same two cached frames — crossJoined 1-row aggregates run
-    // their stages concurrently inside one job). The member error keeps
-    // the inner component-keyed join (no null-keyed noise rows ever enter
-    // a join — a component=null hot key would hash to one task at scale);
-    // coalesce covers the no-members case, where the sum aggregate is
-    // empty and the error is 0.0 exactly as the old nClusters==0 branch.
-    val statsRow = centroids.agg(count(lit(1)).as("k"))
-      .crossJoin(members.join(centroids, "component")
-        .agg(coalesce(sum(Distances.l1(col("qi"), col("centroid"))),
-          lit(0.0)).as("ce")))
-      .crossJoin(noise.agg(count(lit(1)).as("nn")))
-      .head()
-    val nClusters = statsRow.getLong(0)
-    val clusterError = statsRow.getDouble(1)
-    val nNoise = statsRow.getLong(2)
+    try {
+      val members = labeled.where(col("component").isNotNull)
+      val noise = labeled.where(col("component").isNull)
+      // per-block cluster count, member error and noise count in ONE
+      // action (round 16, guide §2.6): the three aggregates are tagged and
+      // unioned so their stages run concurrently inside one job instead
+      // of three driver round-trips. Long metrics ride a long column, the
+      // error a double column — no lossy cast. The member error keeps the
+      // inner component-keyed join (no null-keyed noise rows ever enter a
+      // join — a component=null hot key would hash to one task at scale).
+      val stats = centroids.groupBy(blocks.of("component").as("ei"))
+        .agg(count(lit(1)).as("vl"))
+        .select(col("ei"), lit("k").as("m"), col("vl"), lit(0.0).as("vd"))
+        .unionByName(members.join(centroids, "component")
+          .groupBy(blocks.of("component").as("ei"))
+          .agg(sum(Distances.l1(col("qi"), col("centroid"))).as("vd"))
+          .select(col("ei"), lit("ce").as("m"), lit(0L).as("vl"), col("vd")))
+        .unionByName(noise.groupBy(blocks.of("id").as("ei"))
+          .agg(count(lit(1)).as("vl"))
+          .select(col("ei"), lit("nn").as("m"), col("vl"), lit(0.0).as("vd")))
+        .collect().map(r => (r.getString(1), r.getInt(0)) -> r).toMap
+      val nClusters = blocks.eps.indices.map(ei =>
+        stats.get(("k", ei)).fold(0L)(_.getLong(2)))
+      val nNoise = blocks.eps.indices.map(ei =>
+        stats.get(("nn", ei)).fold(0L)(_.getLong(2)))
+      val clustered = blocks.eps.indices.filter(nClusters(_) > 0)
+      val totalClusters = nClusters.sum
 
-    // Noise → nearest cluster centroid, L1, ties to the lowest component id
-    // (assign_nearest, DBSCAN.py:126-133; broadcast like centroidsBC :188).
-    // The argmin is the native [[graft.functions.VecKernels.nearest_centroids]]
-    // projection — one pass over the noise rows with the centroid matrix as
-    // a codegen reference object, instead of a crossJoin that shuffles
-    // |noise|·|clusters| candidate rows through a group-min (at sf0.1 /
-    // ε=0.5 that was 30M rows for an 18k-row answer). Components are Longs,
-    // so centroids are indexed 0..n-1 ascending-by-component for the kernel
-    // (kernel ties → lowest index = lowest component id, same tiebreak as
-    // the min-struct form) and an_qi is re-joined by component, exactly
-    // like the members' path. Past ~8k clusters the component-decode
-    // literal would bloat the plan, so the pruned-exact kernel takes over
-    // (same labels, bit-equal distances, probe-bounded per row) up to the
-    // [[MaxAssignElements]] budget; only beyond THAT does the
-    // broadcast-join form survive, because it alone never collects.
-    val (noiseAssigned, noiseError) =
-      if (nClusters == 0) {
-        val na = noise.select(col("id"), col("qi"), col("component"),
-          lit(null).cast(centroids.schema("centroid").dataType).as("an_qi"),
+      // Noise → nearest same-block centroid, L1, ties to the lowest
+      // component id (assign_nearest, DBSCAN.py:126-133). Up to ~8k
+      // clusters the argmin is the native nearest_centroids projection —
+      // one pass over the noise rows with the centroid matrix as a
+      // codegen reference object, instead of a crossJoin that shuffles
+      // |noise|·|clusters| candidate rows through a group-min. Past that
+      // the component-decode literal would bloat the plan, so the
+      // pruned-exact kernel takes over (same labels, bit-equal distances)
+      // up to the [[MaxAssignElements]] budget; beyond it nothing may
+      // collect or broadcast, and the coarse-bucket probe join keeps the
+      // centroid table distributed (per-block jobs, never a rows × k
+      // candidate shuffle). Each block has its own centroid set; the
+      // per-block parts are unioned into one frame.
+      def noiseIn(ei: Int) =
+        noise.where(blocks.of("id") === ei).select(col("id"), col("qi"))
+      val assigned: Seq[DataFrame] =
+        if (totalClusters == 0) Seq.empty
+        else if (totalClusters <= maxAssignCentroids(dim)) {
+          // ascending component ids per block — the kernels' documented
+          // precondition (collect order is arbitrary)
+          val byBlock = centroids
+            .select(blocks.of("component"), col("component"), col("centroid"))
+            .collect().groupBy(_.getInt(0))
+            .map { case (ei, rows) =>
+              ei -> rows.map(r => (r.getLong(1), r.getSeq[Double](2).toArray))
+                .sortBy(_._1).toIndexedSeq
+            }
+          val nearestIn =
+            if (totalClusters <= KernelAssignMaxClusters) withKernelNearest _
+            else withPrunedNearest _
+          clustered.map(ei => nearestIn(noiseIn(ei), "qi", byBlock(ei),
+            "cc", "an_err"))
+        } else clustered.map(ei =>
+          graft.operators.CentroidJoin.assignExact(noiseIn(ei), "id", "qi",
+              centroids.where(blocks.of("component") === ei)
+                .select(col("component"), col("centroid")),
+              "component", "centroid", "cc", "__cent", "an_err")
+            .drop("__cent"))
+
+      val noiseError =
+        if (!clustered.exists(nNoise(_) > 0)) Map.empty[Int, Double]
+        else assigned.reduce(_ unionByName _)
+          .groupBy(blocks.of("id")).agg(sum("an_err"))
+          .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      val unassigned = noise.where(!blocks.of("id").isin(clustered: _*))
+        .select(col("id"), col("qi"), lit(null).cast("long").as("cc"),
           lit(null).cast("double").as("an_err"))
-        (na, if (nNoise == 0) 0.0 else Double.PositiveInfinity)
-      } else {
-        val na =
-          if (nClusters <= maxAssignCentroids(dim)) {
-            val sorted = centroids.select(col("component"), col("centroid"))
-              .collect()
-              .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-              .sortBy(_._1).toIndexedSeq
-            // LEFT join: a null qi yields a null kernel result and must
-            // keep its row, with null an_qi/an_err
-            (if (nClusters <= KernelAssignMaxClusters)
-               withKernelNearest(noise, "qi", sorted, "cc", "an_err")
-             else
-               withPrunedNearest(noise, "qi", sorted, "cc", "an_err"))
-              .select(col("id"), col("qi"), col("cc"), col("an_err"))
-              .join(broadcast(centroids
-                .select(col("component").as("cc"), col("centroid"))),
-                Seq("cc"), "left")
-              .select(col("id"), col("qi"),
-                lit(null).cast("long").as("component"),
-                col("centroid").as("an_qi"), col("an_err"))
-          } else {
-            // past the element budget nothing may collect OR broadcast:
-            // the coarse-bucket probe join keeps the centroid table
-            // distributed and ships only its √k summary — identical
-            // min-struct semantics (ties → lowest component, null qi →
-            // null outputs) to the old broadcast crossJoin it replaces,
-            // without the rows × k candidate shuffle
-            graft.operators.CentroidJoin.assignExact(
-                noise.select(col("id"), col("qi")), "id", "qi",
-                centroids.select(col("component"), col("centroid")),
-                "component", "centroid", "__cc", "an_qi", "an_err")
-              .select(col("id"), col("qi"),
-                lit(null).cast("long").as("component"),
-                col("an_qi"), col("an_err"))
-          }
-        val err =
-          if (nNoise == 0) 0.0
-          else na.agg(sum("an_err")).head().getDouble(0)
-        (na, err)
-      }
+      val nearest = (assigned :+ unassigned).reduce(_ unionByName _)
 
-    val memberAssigned = members.join(centroids, "component")
+      // a clusterless block is the reference's [eps, 0, n, 0, ∞, ∞]
+      // empty record (DBSCAN.py:163-167); all its points are noise
+      val records = blocks.eps.indices.map { ei =>
+        val ce = stats.get(("ce", ei)).fold(0.0)(_.getDouble(3))
+        val ne =
+          if (nNoise(ei) == 0) 0.0
+          else if (nClusters(ei) == 0) Double.PositiveInfinity
+          else noiseError(ei)
+        SweepRecord(blocks.eps(ei), nClusters(ei), nNoise(ei), ce, ne,
+          ce + ne, 0.0)
+      }
+      Clustered(labeled, centroids, nearest, records)
+    } catch { case t: Throwable =>
+      // a failed stat job must not strand the two caches for the
+      // session's lifetime
+      labeled.unpersist(); centroids.unpersist(); throw t
+    }
+  }
+
+  /** Run DBSCAN over points identified by a unique Long `idCol` with
+    * `array<double>` coordinates `qiCol`.
+    *
+    * @param weightCol multiplicity column: the reference runs its cartesian
+    *   over the raw (duplicate-bearing) rows, so duplicates count toward
+    *   minPts; value-collapsed callers pass the duplicate count here.
+    * @param k  k-anonymity parameter: components with fewer than k distinct
+    *   members are noise (DBSCAN.py:176-179). Usually == minPts.
+    * @param pairsOpt optional precomputed ε-pair set (the epsJoinGrid
+    *   output over (id, qi, w) for the SAME points and eps) — callers that
+    *   already hold the ε-graph (e.g. the gate registry's per-dir cache)
+    *   pass it here so the join isn't rebuilt; it is NOT unpersisted.
+    */
+  def run(points: DataFrame, idCol: String, qiCol: String, eps: Double,
+          minPts: Int, k: Int, mode: ClusterMode = Cc,
+          weightCol: Option[String] = None, blockDims: Int = 2,
+          pairsOpt: Option[DataFrame] = None): DbscanModel = {
+    val w = weightCol.map(col).getOrElse(lit(1L)).cast("long")
+    val pts = points.select(col(idCol).cast("long").as("id"),
+      col(qiCol).as("qi"), w.as("w"))
+
+    // ε-neighborhood pairs (self included) via grid blocking; reused by the
+    // core-point test and the edge list, so persist across those jobs.
+    val ownPairs = pairsOpt.isEmpty
+    val pairs = pairsOpt.getOrElse(NeighborJoin
+      .epsJoinGrid(pts, "id", "qi", eps, blockDims)
+      .persist(StorageLevel.MEMORY_AND_DISK))
+    val c = try cluster(pts.select("id", "qi"),
+        pairs.select(lit(0).as("ei"), col("a_id"), col("a_w"), col("b_id"),
+          col("b_w")),
+        Blocks(Seq(eps)), minPts, k, mode)
+      finally if (ownPairs) pairs.unpersist()
+
+    // members take their own centroid; noise takes the centroid its
+    // an_err was measured to, from the same persisted table — so
+    // noiseError is the sum of the very an_err values published here
+    val memberAssigned = c.labeled.where(col("component").isNotNull)
+      .join(c.centroids, "component")
       .select(col("id"), col("qi"), col("component"),
         col("centroid").as("an_qi"),
         Distances.l1(col("qi"), col("centroid")).as("an_err"))
+    val noiseAssigned = c.nearest
+      .join(c.centroids.select(col("component").as("cc"),
+        col("centroid").as("an_qi")), Seq("cc"), "left")
+      .select(col("id"), col("qi"), lit(null).cast("long").as("component"),
+        col("an_qi"), col("an_err"))
 
     // carry any extra input columns (e.g. the preserved label) through
     val extras = points.columns.toSeq
-      .filterNot(c => c == idCol || c == qiCol || weightCol.contains(c))
+      .filterNot(n => n == idCol || n == qiCol || weightCol.contains(n))
     val base = memberAssigned.unionByName(noiseAssigned)
       .withColumn("is_noise", col("component").isNull)
     val assignments = (if (extras.isEmpty) base
@@ -304,9 +375,10 @@ object Dbscan {
         "id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    if (ownPairs) pairs.unpersist()
-    labeled.unpersist()
-    DbscanModel(assignments, centroids, nClusters, nNoise, clusterError, noiseError)
+    c.labeled.unpersist()
+    val r = c.records.head
+    DbscanModel(assignments, c.centroids, r.nClusters, r.nNoise,
+      r.clusterError, r.noiseError)
   }
 
   /** Reference-faithful value-collapsed mode: rows are deduplicated into
@@ -332,7 +404,7 @@ object Dbscan {
   /** ε sweep with argmin-by-total-error selection (DBSCAN.py:148-205).
     * Returns all per-ε records plus the best model (reference keeps the
     * output of the best ε only). Empty edge sets record
-    * [eps, 0, n, 0, ∞, ∞] and skip clustering (DBSCAN.py:163-167).
+    * [eps, 0, n, 0, ∞, ∞] (DBSCAN.py:163-167).
     *
     * The ε-join — the sweep's dominant cost — runs ONCE, at max(epsRange)
     * with the L1 distance materialized; each ε's pair set is the
@@ -340,18 +412,20 @@ object Dbscan {
     * pays one shuffle instead of |epsRange|. The reference hoists only the
     * vertices DF out of its loop (DBSCAN.py:157); this hoists the join too.
     *
-    * In the default CC mode the per-ε RECORDS are additionally computed in
-    * one batched pass ([[sweepRecordsBatched]]): every radius's graph is
-    * clustered in a single connected-components fixpoint over the disjoint
-    * union of the ε-graphs, so the sweep pays one set of CC rounds instead
-    * of |epsRange| — and only the winning ε's full model is built.
+    * The per-ε RECORDS then come from one batched [[cluster]] pass in
+    * every [[ClusterMode]]: each pair is tagged with every radius that
+    * admits it, and all radii's graphs are clustered as one disjoint union
+    * (one set of CC rounds instead of |epsRange|) — only the winning ε's
+    * full model is built, by [[run]] over its slice. Only when the
+    * namespaced ids would overflow a Long does the same pass run once per
+    * ε.
     *
     * @param runner optional per-ε model source — lets callers with a
     *   model cache (e.g. the gate registry, which memoizes one ε already)
-    *   serve that ε from the cache while the sweep still computes the
-    *   rest and does the argmin. Defaults to [[run]] over the shared
-    *   ε_max pair set; passing a runner also disables record batching
-    *   (the runner IS the per-ε path).
+    *   serve that ε from the cache while the sweep computes the argmin.
+    *   With a runner there is no batched pass: every record comes from
+    *   the runner's model. Runner-served models belong to the caller —
+    *   the sweep never unpersists them, winning or losing.
     */
   def sweep(points: DataFrame, idCol: String, qiCol: String,
             epsRange: Seq[Double], minPts: Int, k: Int,
@@ -360,285 +434,92 @@ object Dbscan {
             runner: Double => DbscanModel = null)
   : (Seq[SweepRecord], Option[(Double, DbscanModel)]) = {
     if (epsRange.isEmpty) return (Seq.empty, None)
-    // released in the finally below — also on failure partway through the
-    // sweep, so an aborted sweep can't strand its largest intermediate
-    var sharedMax: DataFrame = null
-    def buildSharedMax(): DataFrame = {
-      val w = weightCol.map(col).getOrElse(lit(1L)).cast("long")
-      val p = points.select(col(idCol).cast("long").as("id"),
-        col(qiCol).as("qi"), w.as("w"))
-      // only the columns [[run]] reads survive the persist — the qi
-      // arrays (the wide part of the join output) are re-joined from
-      // `points` inside run, not carried pair-wise
-      NeighborJoin
-        .epsJoinGrid(p, "id", "qi", epsRange.max, blockDims,
-          distCol = Some("d"))
-        .select("a_id", "a_w", "b_id", "b_w", "d")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
+    if (runner != null) return sweepWith(points, epsRange, runner)
+    val w = weightCol.map(col).getOrElse(lit(1L)).cast("long")
+    val pts = points.select(col(idCol).cast("long").as("id"),
+      col(qiCol).as("qi"), w.as("w"))
+    // empty-input check BEFORE any head() on the points — head() on an
+    // empty Dataset throws, the agg always returns one row
+    val idRow = pts.agg(min("id"), max("id")).head()
+    if (idRow.isNullAt(0))
+      return (epsRange.map(e => SweepRecord(e, 0, 0, 0.0, 0.0, 0.0, 0.0)), None)
+    val (minId, maxId) = (idRow.getLong(0), idRow.getLong(1))
 
+    // only the columns the core reads survive the persist — the qi
+    // arrays (the wide part of the join output) are re-joined from the
+    // points, not carried pair-wise. Released in the finally — also on
+    // failure partway through the sweep, so an aborted sweep can't
+    // strand its largest intermediate.
+    val sharedMax = NeighborJoin
+      .epsJoinGrid(pts, "id", "qi", epsRange.max, blockDims,
+        distCol = Some("d"))
+      .select("a_id", "a_w", "b_id", "b_w", "d")
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      if (runner == null && mode == Cc) {
-        // batched path: records from ONE union-CC pass, then one model build
-        sharedMax = buildSharedMax()
-        val t0 = System.nanoTime()
-        val records = try sweepRecordsBatched(points, idCol, qiCol, sharedMax,
-          epsRange, minPts, k)
-        catch { case _: BatchedSweepUnsupported =>
-          null // ids unsuitable for namespacing — fall through to the loop
-        }
-        if (records != null) {
-          // the batched pass is shared work — per-ε attribution is an
-          // even split; the winning ε's record additionally carries its
-          // (only) full model build, approximating the reference's
-          // per-ε timing semantics
-          val secs = (System.nanoTime() - t0) / 1e9
-          val recs = records.map(_.copy(seconds = secs / epsRange.length))
-          var best: Option[(Double, DbscanModel)] = None
-          var minCost = Double.PositiveInfinity
-          for (r <- recs if r.totalError < minCost) {
-            minCost = r.totalError; best = Some((r.eps, null))
-          }
-          // empty input yields all-zero records (the guard in
-          // sweepRecordsBatched) — there is no model to build, and run()
-          // would throw on the empty points
-          val emptyInput = recs.forall(r => r.nClusters == 0 && r.nNoise == 0)
-          val t1 = System.nanoTime()
-          val bestModel = if (emptyInput) None else best.map { case (eps, _) =>
-            (eps, run(points, idCol, qiCol, eps, minPts, k, mode, weightCol,
-              blockDims, pairsOpt = Some(sharedMax.where(col("d") < eps))))
-          }
-          val buildSecs = (System.nanoTime() - t1) / 1e9
-          return (recs.map(r =>
-            if (best.exists(_._1 == r.eps)) r.copy(seconds = r.seconds + buildSecs)
-            else r), bestModel)
-        }
+      val t0 = System.nanoTime()
+      // tag each pair with every ε-index whose radius admits it (strict <)
+      val tagged = sharedMax
+        .select(col("a_id"), col("a_w"), col("b_id"), col("b_w"), col("d"),
+          posexplode(array(epsRange.map(lit(_)): _*)).as(Seq("ei", "epsv")))
+        .where(col("d") < col("epsv"))
+        .select(col("ei"), col("a_id"), col("a_w"), col("b_id"), col("b_w"))
+      def pass(t: DataFrame, blocks: Blocks): Seq[SweepRecord] = {
+        val c = cluster(pts.select("id", "qi"), t, blocks, minPts, k, mode)
+        c.labeled.unpersist(); c.centroids.unpersist()
+        c.records
       }
-
-      val doRun: Double => DbscanModel =
-        if (runner != null) runner
-        else {
-          if (sharedMax == null) sharedMax = buildSharedMax()
-          eps => run(points, idCol, qiCol, eps, minPts, k, mode, weightCol,
-            blockDims, pairsOpt = Some(sharedMax.where(col("d") < eps)))
-        }
-      val n = points.count()
-      var best: Option[(Double, DbscanModel)] = None
-      var minCost = Double.PositiveInfinity
-      val records = epsRange.map { eps =>
-        val t0 = System.nanoTime()
-        val m = doRun(eps)
-        val secs = (System.nanoTime() - t0) / 1e9
-        val rec =
-          if (m.nClusters == 0 && m.nNoise == n && m.clusterError == 0.0)
-            SweepRecord(eps, 0, n, 0.0, Double.PositiveInfinity,
-              Double.PositiveInfinity, secs)
-          else
-            SweepRecord(eps, m.nClusters, m.nNoise, m.clusterError,
-              m.noiseError, m.totalError, secs)
-        if (rec.totalError < minCost) {
-          best.foreach(_._2.unpersist())
-          minCost = rec.totalError
-          best = Some((eps, m))
-        } else m.unpersist()
-        rec
+      val span = Try(Math.addExact(Math.subtractExact(maxId, minId), 1L))
+        .filter(s => Try(Math.multiplyExact(s, epsRange.length.toLong)).isSuccess)
+      val batched = span.toOption match {
+        case Some(s) => pass(tagged, Blocks(epsRange, minId, s))
+        case None => epsRange.indices.flatMap(ei =>
+          pass(tagged.where(col("ei") === ei), Blocks(Seq(epsRange(ei)))))
       }
-      (records, best)
-    } finally {
-      if (sharedMax != null) sharedMax.unpersist()
-    }
+      // the batched pass is shared work — per-ε attribution is an even
+      // split; the winning ε's record additionally carries its (only)
+      // full model build, approximating the reference's per-ε timing
+      val secs = (System.nanoTime() - t0) / 1e9
+      val recs = batched.map(_.copy(seconds = secs / epsRange.length))
+      val bestEps = recs.filter(_.totalError.isFinite)
+        .reduceOption((a, b) => if (b.totalError < a.totalError) b else a)
+        .map(_.eps)
+      val t1 = System.nanoTime()
+      val best = bestEps.map(eps =>
+        (eps, run(points, idCol, qiCol, eps, minPts, k, mode, weightCol,
+          blockDims, pairsOpt = Some(sharedMax.where(col("d") < eps)))))
+      val buildSecs = (System.nanoTime() - t1) / 1e9
+      (recs.map(r =>
+        if (bestEps.contains(r.eps)) r.copy(seconds = r.seconds + buildSecs)
+        else r), best)
+    } finally sharedMax.unpersist()
   }
 
-  private final class BatchedSweepUnsupported extends RuntimeException
-
-  /** Per-ε sweep records from ONE connected-components fixpoint.
-    *
-    * Every ε's graph is embedded in a disjoint union by namespacing vertex
-    * ids as `epsIdx·(maxId+1) + id`: no edge crosses an ε-block, so the
-    * components of the union restricted to a block are exactly that ε's
-    * components, and the component representative (min namespaced id)
-    * decodes back to that ε's min member id. The union graph does the work
-    * of |epsRange| graphs in one set of large-star/small-star rounds —
-    * rounds are the sweep's barrier cost, identical per ε at gate scale
-    * and dominated by stragglers at cluster scale, so sharing them is a
-    * win at every SF (same total bytes, ~|epsRange|× fewer barriers).
-    *
-    * Replicates [[run]]'s stats per ε exactly (DbscanSpec pins
-    * record-equality against fresh per-ε runs): weighted core rule
-    * a_w·Σb_w ≥ minPts, k-anonymity over DISTINCT-member counts,
-    * unweighted centroids, noise→nearest-centroid L1, and the
-    * [eps, 0, n, 0, ∞, ∞] record shape for clusterless radii.
-    */
-  private def sweepRecordsBatched(points: DataFrame, idCol: String,
-                                  qiCol: String, sharedMax: DataFrame,
-                                  epsRange: Seq[Double], minPts: Int, k: Int)
-  : Seq[SweepRecord] = {
-    val pts = points.select(col(idCol).cast("long").as("id"),
-      col(qiCol).as("qi"))
-    // empty-input check BEFORE the dim head() — head() on an empty
-    // Dataset throws, the agg below always returns one row
-    val idRow = pts.agg(min("id"), max("id"), count(lit(1))).head()
-    if (idRow.isNullAt(0)) return epsRange.map(e =>
-      SweepRecord(e, 0, 0, 0.0, 0.0, 0.0, 0.0))
-    val dim = points.select(size(col(qiCol))).head().getInt(0)
-    val (minId, maxId, n) = (idRow.getLong(0), idRow.getLong(1), idRow.getLong(2))
-    val off = maxId + 1
-    val nEps = epsRange.length
-    // namespacing needs nonnegative ids and epsIdx·off within Long range
-    if (minId < 0 || off <= 0 || off > Long.MaxValue / nEps)
-      throw new BatchedSweepUnsupported
-    val epsLit = array(epsRange.map(lit(_)): _*)
-
-    // tag each pair with every ε-index whose radius admits it (strict <)
-    val tagged = sharedMax
-      .select(col("a_id"), col("a_w"), col("b_id"), col("b_w"), col("d"),
-        posexplode(epsLit).as(Seq("ei", "epsv")))
-      .where(col("d") < col("epsv"))
-      .select(col("ei"), col("a_id"), col("a_w"), col("b_id"), col("b_w"))
-
-    // weighted core rule per (ε, point), as in [[run]]
-    val core = tagged.groupBy(col("ei"), col("a_id"), col("a_w"))
-      .agg(sum("b_w").as("nw"))
-      .where(col("a_w") * col("nw") >= minPts)
-      .select(col("ei").as("cei"), col("a_id").as("core_id"))
-
-    // namespaced directed edges core → neighbor across all ε at once
-    val edges = tagged.join(core,
-        tagged("ei") === core("cei") && tagged("a_id") === core("core_id"),
-        "left_semi")
-      .select((col("ei") * off + col("a_id")).as("src"),
-        (col("ei") * off + col("b_id")).as("dst"))
-
-    // `/` on longs is double division in Spark SQL — decode with DIV so
-    // the quotient stays exact at any id magnitude
-    val comp = ConnectedComponents.run(edges)
-      .select((col("id") % off).as("id"),
-        expr(s"CAST(id DIV ${off}L AS INT)").as("ei"),
-        (col("component") % off).as("component"))
-
-    // every point appears in every ε-block; unmatched ⇒ immediate noise
-    val verts = pts.select(col("id"), col("qi"),
-      explode(sequence(lit(0), lit(nEps - 1))).as("ei"))
-    val withComp = verts.join(comp, Seq("ei", "id"), "left")
-    val sizes = withComp.where(col("component").isNotNull)
-      .groupBy("ei", "component").agg(count(lit(1)).as("csize"))
-    val labeled = withComp.join(sizes, Seq("ei", "component"), "left")
-      .select(col("ei"), col("id"), col("qi"),
-        when(col("csize") >= k, col("component")).as("component"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // unpersisted in the finally: a failed stat job must not strand the
-    // two caches for the session's lifetime (same hardening as sweep()'s
-    // sharedMax)
-    val dimAvgs = (0 until dim).map(i =>
-      avg(element_at(col("qi"), i + 1)).as(s"c$i"))
-    val centroids = labeled.where(col("component").isNotNull)
-      .groupBy("ei", "component")
-      .agg(dimAvgs.head, dimAvgs.tail: _*)
-      .select(col("ei"), col("component"),
-        array((0 until dim).map(i => col(s"c$i")): _*).as("centroid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val (nClustersByEi, clusterErrByEi, noiseStatsByEi, nNoiseByEi) = try {
-      val noise = labeled.where(col("component").isNull)
-      // per-ε cluster count, member error and noise count in ONE action
-      // (round 16, as in [[run]]): the three per-ei aggregates are tagged
-      // and unioned so their stages run concurrently inside one job
-      // instead of three sequential driver round-trips. Long metrics ride
-      // a long column, the error a double column — no lossy cast.
-      val statRows = centroids.groupBy("ei")
-        .agg(count(lit(1)).as("vl")).select(col("ei"), lit("k").as("m"),
-          col("vl"), lit(0.0).as("vd"))
-        .unionByName(labeled.where(col("component").isNotNull)
-          .join(centroids, Seq("ei", "component"))
-          .groupBy("ei")
-          .agg(sum(Distances.l1(col("qi"), col("centroid"))).as("vd"))
-          .select(col("ei"), lit("ce").as("m"), lit(0L).as("vl"), col("vd")))
-        .unionByName(noise.groupBy("ei").agg(count(lit(1)).as("vl"))
-          .select(col("ei"), lit("nn").as("m"), col("vl"), lit(0.0).as("vd")))
-        .collect()
-      val nClustersByEi = statRows.filter(_.getString(1) == "k")
-        .map(r => r.getInt(0) -> r.getLong(2)).toMap
-      val clusterErrByEi = statRows.filter(_.getString(1) == "ce")
-        .map(r => r.getInt(0) -> r.getDouble(3)).toMap
-      val nNoiseByEiPre = statRows.filter(_.getString(1) == "nn")
-        .map(r => r.getInt(0) -> r.getLong(2)).toMap
-      // noise error per ε: min-L1 to that ε's centroids. Like [[run]]'s
-      // noise assign, the argmin is the shared kernel helper per ε-block
-      // (each block has its own centroid matrix), all blocks unioned into
-      // ONE aggregation job over the cached noise rows — not a join that
-      // explodes |noise|·|centroids| candidate rows. Past the kernel cap
-      // each ε-block's argmin runs through the pruned-exact index (same
-      // labels, bit-equal distances); only past the element budget does
-      // the collect-free coarse-bucket probe join take over.
-      val totalClusters = nClustersByEi.values.sum
-      val noiseStatsByEi = (if (totalClusters == 0) {
-        // no block has clusters: every record is the ∞ empty record and
-        // no noise error is needed
-        points.sparkSession.emptyDataFrame
-          .select(lit(0).as("ei"), lit(0.0).as("e"))
-      } else if (totalClusters <= maxAssignCentroids(dim)) {
-        // real component ids, ascending — withKernelNearest's documented
-        // precondition (collect order is arbitrary; sorting also makes
-        // the decoded component meaningful, and equal-distance ties break
-        // to the lowest component id exactly as run()'s noise assign)
-        val centsByEi = centroids
-          .select(col("ei"), col("component"), col("centroid")).collect()
-          .groupBy(_.getInt(0))
-          .map { case (ei, rows) =>
-            ei -> rows.map(r => (r.getLong(1), r.getSeq[Double](2).toArray))
-              .sortBy(_._1).toIndexedSeq
-          }
-        val useKernel = totalClusters <= KernelAssignMaxClusters
-        centsByEi.toSeq.map { case (ei, sorted) =>
-          (if (useKernel)
-             withKernelNearest(noise.where(col("ei") === ei), "qi", sorted,
-               "__cc", "d")
-           else
-             withPrunedNearest(noise.where(col("ei") === ei), "qi", sorted,
-               "__cc", "d"))
-            .select(lit(ei).as("ei"), col("d"))
-        }.reduce(_ unionByName _)
-          .groupBy("ei").agg(sum("d").as("e"))
-      } else {
-        // past the element budget nothing may collect or broadcast (the
-        // flattened centroid table alone would exceed 64 MB): each
-        // ε-block's argmin runs through the coarse-bucket probe join —
-        // per-block jobs instead of one batched job, acceptable in a
-        // regime whose fits "should be consumed through the assignments
-        // table" anyway, and never a rows × k candidate shuffle
-        nClustersByEi.keys.toSeq.sorted.map { ei =>
-          graft.operators.CentroidJoin.assignExact(
-              noise.where(col("ei") === ei).select(col("id"), col("qi")),
-              "id", "qi",
-              centroids.where(col("ei") === ei)
-                .select(col("component"), col("centroid")),
-              "component", "centroid", "__cc", "__cent", "d")
-            .select(lit(ei).as("ei"), col("d"))
-        }.reduce(_ unionByName _)
-          .groupBy("ei").agg(sum("d").as("e"))
-      }).collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      (nClustersByEi, clusterErrByEi, noiseStatsByEi, nNoiseByEiPre)
-    } finally {
-      labeled.unpersist()
-      centroids.unpersist()
-    }
-
-    epsRange.indices.map { ei =>
-      val nClusters = nClustersByEi.getOrElse(ei, 0L)
-      val nNoise = nNoiseByEi.getOrElse(ei, 0L)
-      if (nClusters == 0)
-        // no clusters ⇒ every point is noise: the reference's
-        // [eps, 0, n, 0, ∞, ∞] empty record (DBSCAN.py:163-167)
-        SweepRecord(epsRange(ei), 0, n, 0.0,
-          if (nNoise == 0) 0.0 else Double.PositiveInfinity,
-          if (nNoise == 0) 0.0 else Double.PositiveInfinity, 0.0)
-      else {
-        val ce = clusterErrByEi.getOrElse(ei, 0.0)
-        val ne = if (nNoise == 0) 0.0 else noiseStatsByEi.getOrElse(ei, 0.0)
-        SweepRecord(epsRange(ei), nClusters, nNoise, ce, ne, ce + ne, 0.0)
+  /** The per-ε loop behind a caller's `runner`: one model per radius, the
+    * argmin kept. Models are the runner's, so none is unpersisted here. */
+  private def sweepWith(points: DataFrame, epsRange: Seq[Double],
+                        runner: Double => DbscanModel)
+  : (Seq[SweepRecord], Option[(Double, DbscanModel)]) = {
+    val n = points.count()
+    var best: Option[(Double, DbscanModel)] = None
+    var minCost = Double.PositiveInfinity
+    val records = epsRange.map { eps =>
+      val t0 = System.nanoTime()
+      val m = runner(eps)
+      val secs = (System.nanoTime() - t0) / 1e9
+      val rec =
+        if (m.nClusters == 0 && m.nNoise == n && m.clusterError == 0.0)
+          SweepRecord(eps, 0, n, 0.0, Double.PositiveInfinity,
+            Double.PositiveInfinity, secs)
+        else
+          SweepRecord(eps, m.nClusters, m.nNoise, m.clusterError,
+            m.noiseError, m.totalError, secs)
+      if (rec.totalError < minCost) {
+        minCost = rec.totalError
+        best = Some((eps, m))
       }
+      rec
     }
+    (records, best)
   }
 
   /** Sweep metrics as a DataFrame matching the reference's eps_record.csv

@@ -40,15 +40,10 @@ object ConnectedComponents {
       .distinct()
       .localCheckpoint(eager = false)
 
-    val debug = sys.env.contains("SPARK_GRAFT_GRAPH_DEBUG")
-    var t0 = System.nanoTime()
     var prev = checksum(e)
-    if (debug) System.err.println(
-      f"[cc] init ${(System.nanoTime() - t0) / 1e9}%.2fs edges=${prev._1}")
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val tLoop = System.nanoTime()
       // Per-source minima come from a window over the edge partition, not
       // a groupBy + self-join: the min-agg form exchanged the edge list
       // twice per star phase (once into the aggregate, once to co-locate
@@ -109,10 +104,7 @@ object ConnectedComponents {
         .localCheckpoint(eager = false)
 
       // the checksum materializes the lazy checkpoint — one fused job
-      t0 = System.nanoTime()
       val cur = checksum(small)
-      if (debug) System.err.println(
-        f"[cc] round $i build ${(t0 - tLoop) / 1e9}%.2fs job ${(System.nanoTime() - t0) / 1e9}%.2fs edges=${cur._1}")
       converged = cur == prev
       prev = cur
       // `small` is now materialized, so the previous round's checkpoint

@@ -4,11 +4,11 @@ import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col}
 
-/** GraphX-backed graph algorithms over edge DataFrames.
-  *
-  * Used for the reference's SCC mode (DBSCAN-strongly-connected-component
-  * .py:174, `stronglyConnectedComponents(maxIter=10)`) and as an independent
-  * implementation to cross-check [[ConnectedComponents]] in tests.
+/** Graph algorithms over edge DataFrames that complement
+  * [[ConnectedComponents]]: the exact SCC of DBSCAN ε-graphs (the
+  * reference's SCC mode, DBSCAN-strongly-connected-component.py:174), and
+  * GraphX's Pregel connected components, kept as an independent
+  * implementation to cross-check [[ConnectedComponents]].
   */
 object GraphAlgs {
 
@@ -49,18 +49,6 @@ object GraphAlgs {
     import spark.implicits._
     Graph.fromEdges(toEdgeRdd(edges), 0)
       .connectedComponents().vertices
-      .toDF("id", "component")
-  }
-
-  /** Directed strongly connected components with bounded iterations —
-    * faithful to the reference's `maxIter=10` mode. Border points (in-edges
-    * only) form singleton SCCs and therefore end up as noise downstream.
-    */
-  def stronglyConnectedComponents(spark: SparkSession, edges: DataFrame,
-                                  numIter: Int = 10): DataFrame = {
-    import spark.implicits._
-    Graph.fromEdges(toEdgeRdd(edges), 0)
-      .stronglyConnectedComponents(numIter).vertices
       .toDF("id", "component")
   }
 

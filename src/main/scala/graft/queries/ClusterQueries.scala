@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.core.QueryCache
 import graft.core.Tables.table
-import graft.dbscan.{Cc, Dbscan, Scc}
+import graft.dbscan.{Cc, Dbscan, DbscanModel, Scc}
 import graft.functions.Distances
 import graft.graph.{ConnectedComponents, GraphAlgs, Traversals}
 import graft.operators.NeighborJoin
@@ -697,14 +697,21 @@ object ClusterQueries {
       import s.implicits._
       // the ε=2.0 leg is served from the shared model cache; smaller ε
       // legs are d<ε slices of the SAME cached pair set (subset property)
-      // rather than fresh joins. The best model stays persisted — it IS
-      // the cache entry.
-      val (recs, _) = Dbscan.sweep(pts(s, dir), "id", "qi",
+      // rather than fresh joins. Runner-served models are ours: the cached
+      // ε=2.0 model stays persisted (it IS the cache entry), the ones
+      // built here are released once the records are in.
+      val built = scala.collection.mutable.ArrayBuffer.empty[DbscanModel]
+      val (recs, _) = try Dbscan.sweep(pts(s, dir), "id", "qi",
         epsRange = Seq(0.5, 2.0), minPts = minPts, k = kAnon,
         runner = e =>
           if (e == eps) sharedModel(s, dir)
-          else Dbscan.run(pts(s, dir), "id", "qi", e, minPts, kAnon, Cc,
-            pairsOpt = Some(sharedPairs(s, dir).where(col("d") < e))))
+          else {
+            val m = Dbscan.run(pts(s, dir), "id", "qi", e, minPts, kAnon, Cc,
+              pairsOpt = Some(sharedPairs(s, dir).where(col("d") < e)))
+            built += m
+            m
+          })
+      finally built.foreach(_.unpersist())
       recs.map(r => (r.eps, r.nClusters, r.nNoise,
         BigDecimal(r.clusterError).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble,
         if (r.noiseError.isPosInfinity) -1.0

@@ -138,18 +138,29 @@ class CentroidJoinSpec extends GraftSuite {
       (i.toLong, Array(blob * 30.0 + (i % 3) * 0.1, blob * 30.0))
     } ++ (0 until 4).map(j =>
       (100L + j, Array(500.0 + j * 40.0, -200.0 + j * 7.0)))).toDF("id", "qi")
-    val base = Dbscan.run(pts, "id", "qi", eps = 2.0, minPts = 3, k = 3)
-    val baseAsg = base.assignments
-      .select("id", "component", "is_noise", "an_err").collect().toSet
-    base.unpersist()
+    // two inputs: run's assignments, and the batched sweep's records (one
+    // probe join per eps-block) over the same points
+    def runAsg() = {
+      val m = Dbscan.run(pts, "id", "qi", eps = 2.0, minPts = 3, k = 3)
+      try m.assignments
+        .select("id", "component", "is_noise", "an_err").collect().toSet
+      finally m.unpersist()
+    }
+    def sweepRecs() = {
+      val (recs, best) = Dbscan.sweep(pts, "id", "qi",
+        epsRange = Seq(0.05, 2.0, 45.0), minPts = 3, k = 3)
+      best.foreach(_._2.unpersist())
+      recs.map(r => (r.eps, r.nClusters, r.nNoise, r.clusterError,
+        r.noiseError))
+    }
+    val (baseAsg, baseRecs) = (runAsg(), sweepRecs())
+    assert(baseRecs.forall(r => r._2 > 0 && r._3 > 0),
+      "every radius must have clusters and noise to assign")
     val saved = Dbscan.assignElementBudget
     try {
       Dbscan.assignElementBudget = 1L // every regime falls to the join
-      val m = Dbscan.run(pts, "id", "qi", eps = 2.0, minPts = 3, k = 3)
-      val got = m.assignments
-        .select("id", "component", "is_noise", "an_err").collect().toSet
-      m.unpersist()
-      assert(got === baseAsg)
+      assert(runAsg() === baseAsg)
+      assert(sweepRecs() === baseRecs)
     } finally Dbscan.assignElementBudget = saved
   }
 

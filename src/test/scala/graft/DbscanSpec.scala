@@ -1,7 +1,8 @@
 package graft
 
-import graft.dbscan.{Cc, CcGraphX, Dbscan, Scc}
+import graft.dbscan.{Cc, CcGraphX, ClusterMode, Dbscan, Scc}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 class DbscanSpec extends GraftSuite {
   import spark.implicits._
@@ -19,6 +20,14 @@ class DbscanSpec extends GraftSuite {
     (21L, Array(100.0, 0.0)), (22L, Array(0.0, 100.0))
   ).toDF("id", "qi")
 
+  /** Core chain p1..p5 tightly packed; border p6 at the edge of p5's ball
+    * with too few neighbors to be core itself — at eps=2.0, minPts=4 CC
+    * absorbs it and SCC leaves it as noise. */
+  private def borderChain = Seq(
+    (1L, Array(0.0)), (2L, Array(0.5)), (3L, Array(1.0)), (4L, Array(1.5)),
+    (5L, Array(2.0)), (6L, Array(3.5))
+  ).toDF("id", "qi")
+
   test("two blobs + noise: 2 clusters, 2 noise, correct membership") {
     val m = Dbscan.run(twoBlobs, "id", "qi", eps = 4.0, minPts = 3, k = 3)
     assert(m.nClusters == 2 && m.nNoise == 2)
@@ -34,12 +43,7 @@ class DbscanSpec extends GraftSuite {
   }
 
   test("CC absorbs border points; SCC leaves them as noise (G3)") {
-    // core chain: p1..p5 tightly packed; border b at edge of p5's ball,
-    // with too few neighbors to be core itself
-    val pts = Seq(
-      (1L, Array(0.0)), (2L, Array(0.5)), (3L, Array(1.0)), (4L, Array(1.5)),
-      (5L, Array(2.0)), (6L, Array(3.5))
-    ).toDF("id", "qi")
+    val pts = borderChain
     val eps = 2.0; val minPts = 4
     val ccM = Dbscan.run(pts, "id", "qi", eps, minPts, k = 4, Cc, blockDims = 1)
     val sccM = Dbscan.run(pts, "id", "qi", eps, minPts, k = 4, Scc, blockDims = 1)
@@ -98,22 +102,72 @@ class DbscanSpec extends GraftSuite {
   }
 
   test("hoisted sweep slices equal fresh per-eps runs (subset property)") {
-    // the sweep's default runner computes pairs ONCE at max(eps) and
-    // slices d < eps per radius; every record must match an independent
-    // full run at that radius exactly
-    val epsRange = Seq(0.5, 1.5, 4.0)
-    val (recs, _) = Dbscan.sweep(twoBlobs, "id", "qi",
-      epsRange = epsRange, minPts = 3, k = 3)
-    for ((eps, rec) <- epsRange.zip(recs)) {
-      val m = Dbscan.run(twoBlobs, "id", "qi", eps, minPts = 3, k = 3)
-      val fresh =
-        if (m.nClusters == 0 && m.nNoise == 10 && m.clusterError == 0.0)
-          (0L, 10L, 0.0, Double.PositiveInfinity)
-        else (m.nClusters, m.nNoise, m.clusterError, m.noiseError)
-      assert((rec.nClusters, rec.nNoise, rec.clusterError, rec.noiseError)
-        == fresh, s"eps=$eps sliced sweep != fresh run")
-      m.unpersist()
+    // the sweep computes pairs ONCE at max(eps), slices d < eps per radius
+    // and clusters every radius in one batched pass; every record must
+    // match an independent full run at that radius exactly, in every
+    // mode. Negative ids are namespaced relative to the minimum id; ids
+    // spanning the whole Long range overflow the namespace and take the
+    // per-eps pass.
+    val shifted = twoBlobs.select((col("id") - 100L).as("id"), col("qi"))
+    val extreme = twoBlobs.select(
+      when(col("id") === 1L, lit(Long.MinValue))
+        .when(col("id") === 22L, lit(Long.MaxValue))
+        .otherwise(col("id")).as("id"), col("qi"))
+    // (points, label, mode, minPts, k, blockDims, epsRange)
+    val inputs = Seq(
+      (twoBlobs, "twoBlobs", Cc, 3, 3, 2, Seq(0.5, 1.5, 4.0)),
+      (twoBlobs, "twoBlobs", CcGraphX, 3, 3, 2, Seq(0.5, 1.5, 4.0)),
+      (twoBlobs, "twoBlobs", Scc, 3, 3, 2, Seq(0.5, 1.5, 4.0)),
+      (borderChain, "borderChain", Cc, 4, 4, 1, Seq(0.4, 1.2, 2.0)),
+      (borderChain, "borderChain", CcGraphX, 4, 4, 1, Seq(0.4, 1.2, 2.0)),
+      (borderChain, "borderChain", Scc, 4, 4, 1, Seq(0.4, 1.2, 2.0)),
+      (shifted, "twoBlobs ids-100", Cc, 3, 3, 2, Seq(0.5, 1.5, 4.0)),
+      (shifted, "twoBlobs ids-100", Scc, 3, 3, 2, Seq(0.5, 1.5, 4.0)),
+      (extreme, "twoBlobs full-range ids", Cc, 3, 3, 2, Seq(0.5, 1.5, 4.0)))
+    val recsOf = scala.collection.mutable.Map
+      .empty[(String, ClusterMode), Seq[(Long, Long, Double, Double)]]
+    for ((pts, label, mode, minPts, k, bd, epsRange) <- inputs) {
+      val n = pts.count()
+      val (recs, best) = Dbscan.sweep(pts, "id", "qi", epsRange, minPts, k,
+        mode, blockDims = bd)
+      best.foreach(_._2.unpersist())
+      for ((eps, rec) <- epsRange.zip(recs)) {
+        val m = Dbscan.run(pts, "id", "qi", eps, minPts, k, mode,
+          blockDims = bd)
+        val fresh =
+          if (m.nClusters == 0 && m.nNoise == n && m.clusterError == 0.0)
+            (0L, n, 0.0, Double.PositiveInfinity)
+          else (m.nClusters, m.nNoise, m.clusterError, m.noiseError)
+        assert((rec.nClusters, rec.nNoise, rec.clusterError, rec.noiseError)
+          == fresh, s"$label $mode eps=$eps: sliced sweep != fresh run")
+        m.unpersist()
+      }
+      recsOf((label, mode)) =
+        recs.map(r => (r.nClusters, r.nNoise, r.clusterError, r.noiseError))
     }
+    assert(recsOf(("borderChain", Cc)) != recsOf(("borderChain", Scc)),
+      "the chain fixture must separate CC from SCC")
+  }
+
+  test("runner-served models stay persisted: the sweep never unpersists them") {
+    // models the caller owns (e.g. a cache entry) must survive the sweep
+    // whether they win, lose to an earlier radius, or are displaced as best
+    def model(i: Long, err: Double) = graft.dbscan.DbscanModel(
+      Seq(i).toDF("id").persist(), Seq(i + 100L).toDF("component").persist(),
+      nClusters = 1, nNoise = 0, clusterError = err, noiseError = 0.0)
+    val models = Map(1.0 -> model(1L, 5.0), 2.0 -> model(2L, 3.0),
+      3.0 -> model(3L, 4.0))
+    try {
+      val (_, best) = Dbscan.sweep(twoBlobs, "id", "qi",
+        epsRange = Seq(1.0, 2.0, 3.0), minPts = 3, k = 3, runner = models)
+      assert(best.map(_._1).contains(2.0))
+      for ((eps, m) <- models) {
+        assert(m.assignments.storageLevel != StorageLevel.NONE,
+          s"eps=$eps assignments were unpersisted by the sweep")
+        assert(m.centroids.storageLevel != StorageLevel.NONE,
+          s"eps=$eps centroids were unpersisted by the sweep")
+      }
+    } finally models.values.foreach(_.unpersist())
   }
 
   test("weighted sweep over collapsed rows equals sweep over duplicates") {
