@@ -42,4 +42,17 @@ object LineageCut {
     * idempotent. */
   def release(df: Dataset[_]): Unit =
     backingRdd(df).foreach(_.unpersist(blocking = false))
+
+  /** Eagerly free the checkpoints a step added to its output: every RDD
+    * leaf of `out`'s plan that its input `in`'s plan lacks (e.g. the final
+    * fixpoint behind a [[graft.graph.ConnectedComponents]] result). Only
+    * call once everything that reads `out` is materialized, and only for
+    * steps whose own RDD leaves are all `localCheckpoint()`s. */
+  def releaseAdded(out: Dataset[_], in: Dataset[_]): Unit = {
+    def leaves(df: Dataset[_]) = df.queryExecution.analyzed.collectLeaves()
+      .collect { case r: LogicalRDD => r.rdd }
+    val inIds = leaves(in).map(_.id).toSet
+    leaves(out).filterNot(r => inIds(r.id))
+      .foreach(_.unpersist(blocking = false))
+  }
 }

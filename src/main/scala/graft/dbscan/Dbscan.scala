@@ -8,17 +8,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import scala.util.Try
 
-/** Which graph-connectivity semantics clusters use (SURVEY §2.7 G2/G3):
-  * CC absorbs border points into the cluster of the core that reaches them;
-  * SCC leaves border points as singleton components (→ noise). `CcGraphX`
-  * is the Pregel implementation, kept as an independent cross-check.
-  * Every mode labels a component by one of its member vertex ids, which is
-  * what lets [[Dbscan.sweep]] cluster all radii in one batched pass
-  * whatever the mode.
+/** Which graph-connectivity semantics clusters use (SURVEY §2.7 G2/G3),
+  * one per reference program: CC absorbs border points into the cluster
+  * of the core that reaches them; SCC leaves border points as singleton
+  * components (→ noise). Both label a component by one of its member
+  * vertex ids, which is what lets [[Dbscan.sweep]] cluster all radii in
+  * one batched pass and publish the winner's ids from that same pass.
   */
 sealed trait ClusterMode
 case object Cc extends ClusterMode
-case object CcGraphX extends ClusterMode
 /** Exact SCC via the DBSCAN-graph specialization (GraphAlgs.dbscanScc). */
 case object Scc extends ClusterMode
 
@@ -57,13 +55,6 @@ final case class SweepRecord(eps: Double, nClusters: Long, nNoise: Long,
   */
 object Dbscan {
 
-  /** Above this many clusters the kernel noise-assign's component-decode
-    * literal array would bloat the plan (and its exhaustive O(k) per-row
-    * scan starts to bite), so [[cluster]]'s noise assign switches to the
-    * pruned-exact argmin ([[withPrunedNearest]]) up to the
-    * [[MaxAssignElements]] budget, and to the probe join beyond. */
-  private[graft] val KernelAssignMaxClusters = 8192
-
   /** Element budget for the driver-collected centroid matrix behind the
     * pruned assign (the matrix rides the plan as one reference object).
     * The bound is on CENTROIDS × DIM, not centroid count alone — the
@@ -87,35 +78,15 @@ object Dbscan {
     assignElementBudget / math.max(1, dim)
 
   /** Adds (`ccName`, `dName`) = (nearest centroid's component id, its L1
-    * distance) via the [[graft.functions.VecKernels.nearest_centroids]]
-    * argmin — one narrow projection, the centroid matrix riding as a
-    * codegen reference object. Components are Longs, so the kernel runs
-    * over indices 0..n-1 in ascending-component order (kernel ties →
-    * lowest index = lowest component id, the min-struct tiebreak) and the
-    * index is decoded through a sorted literal array. A null vector yields
-    * null in both columns. [[cluster]]'s noise assign for up to
-    * [[KernelAssignMaxClusters]] clusters. `sorted` MUST be ascending by
-    * component id. */
-  private[graft] def withKernelNearest(df: DataFrame, qiCol: String,
-                                sorted: IndexedSeq[(Long, Array[Double])],
-                                ccName: String, dName: String): DataFrame = {
-    val idxCents = sorted.indices.map(i => i -> sorted(i)._2)
-    val compArr = array(sorted.map(s => lit(s._1)): _*)
-    df.withColumn("__nc", element_at(
-        graft.functions.VecKernels.nearest_centroids(
-          col(qiCol), idxCents, 1, cosine = false), 1))
-      .withColumn(ccName, element_at(compArr, col("__nc.cluster") + 1))
-      .withColumn(dName, col("__nc.d"))
-      .drop("__nc")
-  }
-
-  /** [[withKernelNearest]]'s >8k-cluster sibling: same columns, same
-    * labels and bit-equal distances, via the triangle-inequality-pruned
-    * exact argmin ([[graft.functions.VecKernels.pruned_nearest]]) —
-    * per-row cost O(√k·dim) expected instead of O(k·dim), component ids
-    * carried inside the index reference object so the plan stays O(1) in
-    * k (no decode-literal array). `sorted` MUST be ascending by
-    * component id. A null vector yields null in both columns. */
+    * distance) via the triangle-inequality-pruned exact argmin
+    * ([[graft.functions.VecKernels.pruned_nearest]]) — one narrow
+    * projection with the centroid matrix and its component ids riding as
+    * one reference object, so the plan stays O(1) in k; per-row cost is
+    * O(√k·dim) expected. Ties go to the lowest component id (the
+    * min-struct tiebreak). The noise assign of [[cluster]] and of the ML
+    * transform up to the [[MaxAssignElements]] budget. `sorted` MUST be
+    * ascending by component id. A null vector yields null in both
+    * columns. */
   private[graft] def withPrunedNearest(df: DataFrame, qiCol: String,
                                 sorted: IndexedSeq[(Long, Array[Double])],
                                 ccName: String, dName: String): DataFrame =
@@ -143,23 +114,35 @@ object Dbscan {
     def of(idCol: String): Column =
       if (span == 0) lit(0L).cast("int")
       else expr(s"CAST($idCol DIV ${span}L AS INT)")
+    /** [[vertex]]'s inverse on block `ei`: the input id of a namespaced
+      * id or component (null stays null). Exact, because every
+      * [[ClusterMode]] labels a component by a member vertex id. */
+    def input(ei: Int, id: Column): Column =
+      if (span == 0) id else id - ei * span + minId
   }
 
   /** A [[cluster]] pass's outputs. `labeled` (id, qi, component; null =
     * noise) and `centroids` (component, centroid, n_members) are persisted
-    * and the caller's to unpersist; `nearest` (id, qi, cc, an_err) is
-    * every noise row with its nearest same-block centroid, null where the
-    * block has no cluster. Ids and components are namespaced. */
-  private final case class Clustered(labeled: DataFrame, centroids: DataFrame,
-                                     nearest: DataFrame,
-                                     records: Seq[SweepRecord])
+    * and materialized; [[publish]] consumes them (the caller releases a
+    * pass it does not publish). `nearest(ei)` (id, qi, cc, an_err) is
+    * block `ei`'s noise rows with their nearest same-block centroid, null
+    * where the block has no cluster — the very rows whose `an_err` sums
+    * to `records(ei).noiseError`. Ids and components are namespaced by
+    * `blocks`. */
+  private final case class Clustered(blocks: Blocks, labeled: DataFrame,
+                                     centroids: DataFrame,
+                                     nearest: IndexedSeq[DataFrame],
+                                     records: Seq[SweepRecord]) {
+    def release(): Unit = { labeled.unpersist(); centroids.unpersist() }
+  }
 
   /** The DBSCAN pipeline over ε-tagged pairs (ei, a_id, a_w, b_id, b_w),
     * each step written once for [[run]] (one block) and [[sweep]] (every
-    * radius in one pass): weighted core rule, core → neighbour edges,
-    * components, k-anonymity, centroids, per-block stats in one action,
-    * and the noise → nearest-centroid assign. `pts` is (id, qi) with
-    * unique ids. Records carry `seconds = 0`.
+    * radius in one pass, the winner published from it): weighted core
+    * rule, core → neighbour edges, components, k-anonymity, centroids,
+    * per-block stats in one action, and the noise → nearest-centroid
+    * assign. `pts` is (id, qi) with unique ids. Records carry
+    * `seconds = 0`.
     */
   private def cluster(pts: DataFrame, tagged: DataFrame, blocks: Blocks,
                       minPts: Int, k: Int, mode: ClusterMode): Clustered = {
@@ -184,7 +167,6 @@ object Dbscan {
 
     val comp = mode match {
       case Cc => ConnectedComponents.run(edges)
-      case CcGraphX => GraphAlgs.connectedComponents(pts.sparkSession, edges)
       case Scc => GraphAlgs.dbscanScc(edges)
     }
 
@@ -250,24 +232,21 @@ object Dbscan {
       val totalClusters = nClusters.sum
 
       // Noise → nearest same-block centroid, L1, ties to the lowest
-      // component id (assign_nearest, DBSCAN.py:126-133). Up to ~8k
-      // clusters the argmin is the native nearest_centroids projection —
-      // one pass over the noise rows with the centroid matrix as a
-      // codegen reference object, instead of a crossJoin that shuffles
-      // |noise|·|clusters| candidate rows through a group-min. Past that
-      // the component-decode literal would bloat the plan, so the
-      // pruned-exact kernel takes over (same labels, bit-equal distances)
-      // up to the [[MaxAssignElements]] budget; beyond it nothing may
-      // collect or broadcast, and the coarse-bucket probe join keeps the
-      // centroid table distributed (per-block jobs, never a rows × k
-      // candidate shuffle). Each block has its own centroid set; the
-      // per-block parts are unioned into one frame.
+      // component id (assign_nearest, DBSCAN.py:126-133). Up to the
+      // [[MaxAssignElements]] budget the argmin is the pruned-exact
+      // kernel — one pass over the noise rows with the centroid matrix as
+      // a reference object, instead of a crossJoin that shuffles
+      // |noise|·|clusters| candidate rows through a group-min; beyond it
+      // nothing may collect or broadcast, and the coarse-bucket probe
+      // join keeps the centroid table distributed (per-block jobs, never
+      // a rows × k candidate shuffle). Each block has its own centroid
+      // set and its own frame.
       def noiseIn(ei: Int) =
         noise.where(blocks.of("id") === ei).select(col("id"), col("qi"))
-      val assigned: Seq[DataFrame] =
-        if (totalClusters == 0) Seq.empty
+      val assigned: Map[Int, DataFrame] =
+        if (totalClusters == 0) Map.empty
         else if (totalClusters <= maxAssignCentroids(dim)) {
-          // ascending component ids per block — the kernels' documented
+          // ascending component ids per block — the kernel's documented
           // precondition (collect order is arbitrary)
           val byBlock = centroids
             .select(blocks.of("component"), col("component"), col("centroid"))
@@ -276,27 +255,24 @@ object Dbscan {
               ei -> rows.map(r => (r.getLong(1), r.getSeq[Double](2).toArray))
                 .sortBy(_._1).toIndexedSeq
             }
-          val nearestIn =
-            if (totalClusters <= KernelAssignMaxClusters) withKernelNearest _
-            else withPrunedNearest _
-          clustered.map(ei => nearestIn(noiseIn(ei), "qi", byBlock(ei),
-            "cc", "an_err"))
-        } else clustered.map(ei =>
+          clustered.map(ei => ei -> withPrunedNearest(noiseIn(ei), "qi",
+            byBlock(ei), "cc", "an_err")).toMap
+        } else clustered.map(ei => ei ->
           graft.operators.CentroidJoin.assignExact(noiseIn(ei), "id", "qi",
               centroids.where(blocks.of("component") === ei)
                 .select(col("component"), col("centroid")),
               "component", "centroid", "cc", "__cent", "an_err")
-            .drop("__cent"))
+            .drop("__cent")).toMap
 
       val noiseError =
         if (!clustered.exists(nNoise(_) > 0)) Map.empty[Int, Double]
-        else assigned.reduce(_ unionByName _)
+        else clustered.map(assigned).reduce(_ unionByName _)
           .groupBy(blocks.of("id")).agg(sum("an_err"))
           .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      val unassigned = noise.where(!blocks.of("id").isin(clustered: _*))
-        .select(col("id"), col("qi"), lit(null).cast("long").as("cc"),
-          lit(null).cast("double").as("an_err"))
-      val nearest = (assigned :+ unassigned).reduce(_ unionByName _)
+      val nearest = blocks.eps.indices.map(ei => assigned.getOrElse(ei,
+        noiseIn(ei).select(col("id"), col("qi"),
+          lit(null).cast("long").as("cc"),
+          lit(null).cast("double").as("an_err"))))
 
       // a clusterless block is the reference's [eps, 0, n, 0, ∞, ∞]
       // empty record (DBSCAN.py:163-167); all its points are noise
@@ -309,16 +285,87 @@ object Dbscan {
         SweepRecord(blocks.eps(ei), nClusters(ei), nNoise(ei), ce, ne,
           ce + ne, 0.0)
       }
-      Clustered(labeled, centroids, nearest, records)
+      Clustered(blocks, labeled, centroids, nearest, records)
     } catch { case t: Throwable =>
       // a failed stat job must not strand the two caches for the
       // session's lifetime
       labeled.unpersist(); centroids.unpersist(); throw t
+    } finally {
+      // labeled now holds the components, so the graph step's own final
+      // checkpoint is dead
+      graft.core.LineageCut.releaseAdded(comp, edges)
+    }
+  }
+
+  /** Builds block `ei` of pass `c` into the published [[DbscanModel]]:
+    * the one builder of a model from a pass, for [[run]] and [[sweep]]
+    * alike. Ids and components are mapped back to the input ids
+    * ([[Blocks.input]]). Members take their own centroid; noise takes the
+    * centroid its `an_err` was measured to, from the same persisted
+    * table, so the model's numbers are `c.records(ei)` and its
+    * `noiseError` is the sum of the very `an_err` values published. Extra
+    * input columns (e.g. the preserved label) are carried through.
+    *
+    * Consumes the pass: the model owns `assignments` and its centroids,
+    * and every other frame the pass persisted is released before this
+    * returns, on failure too — only after the model's frames are
+    * materialized, so nothing published recomputes from a released frame.
+    */
+  private def publish(c: Clustered, ei: Int, points: DataFrame,
+                      idCol: String, qiCol: String,
+                      weightCol: Option[String]): DbscanModel = {
+    val blocks = c.blocks
+    // a one-block pass's centroids are already the model's
+    val cents =
+      if (blocks.span == 0) c.centroids
+      else c.centroids.where(blocks.of("component") === ei)
+        .select(blocks.input(ei, col("component")).as("component"),
+          col("centroid"), col("n_members"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    var assignments: DataFrame = null
+    try {
+      val memberAssigned = c.labeled
+        .where(col("component").isNotNull && blocks.of("id") === ei)
+        .select(blocks.input(ei, col("id")).as("id"), col("qi"),
+          blocks.input(ei, col("component")).as("component"))
+        .join(cents, "component")
+        .select(col("id"), col("qi"), col("component"),
+          col("centroid").as("an_qi"),
+          Distances.l1(col("qi"), col("centroid")).as("an_err"))
+      val noiseAssigned = c.nearest(ei)
+        .select(blocks.input(ei, col("id")).as("id"), col("qi"),
+          blocks.input(ei, col("cc")).as("cc"), col("an_err"))
+        .join(cents.select(col("component").as("cc"),
+          col("centroid").as("an_qi")), Seq("cc"), "left")
+        .select(col("id"), col("qi"), lit(null).cast("long").as("component"),
+          col("an_qi"), col("an_err"))
+
+      val extras = points.columns.toSeq
+        .filterNot(n => n == idCol || n == qiCol || weightCol.contains(n))
+      val base = memberAssigned.unionByName(noiseAssigned)
+        .withColumn("is_noise", col("component").isNull)
+      assignments = (if (extras.isEmpty) base
+        else base.join(
+          points.select((col(idCol).cast("long").as("id") +: extras.map(col)): _*),
+          "id"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      if (cents ne c.centroids) cents.count()
+      assignments.count()
+      val r = c.records(ei)
+      DbscanModel(assignments, cents, r.nClusters, r.nNoise, r.clusterError,
+        r.noiseError)
+    } catch { case t: Throwable =>
+      if (assignments != null) assignments.unpersist()
+      cents.unpersist(); throw t
+    } finally {
+      c.labeled.unpersist()
+      if (cents ne c.centroids) c.centroids.unpersist()
     }
   }
 
   /** Run DBSCAN over points identified by a unique Long `idCol` with
-    * `array<double>` coordinates `qiCol`.
+    * `array<double>` coordinates `qiCol`: one ε-block of [[cluster]],
+    * published by [[publish]].
     *
     * @param weightCol multiplicity column: the reference runs its cartesian
     *   over the raw (duplicate-bearing) rows, so duplicates count toward
@@ -349,36 +396,7 @@ object Dbscan {
           col("b_w")),
         Blocks(Seq(eps)), minPts, k, mode)
       finally if (ownPairs) pairs.unpersist()
-
-    // members take their own centroid; noise takes the centroid its
-    // an_err was measured to, from the same persisted table — so
-    // noiseError is the sum of the very an_err values published here
-    val memberAssigned = c.labeled.where(col("component").isNotNull)
-      .join(c.centroids, "component")
-      .select(col("id"), col("qi"), col("component"),
-        col("centroid").as("an_qi"),
-        Distances.l1(col("qi"), col("centroid")).as("an_err"))
-    val noiseAssigned = c.nearest
-      .join(c.centroids.select(col("component").as("cc"),
-        col("centroid").as("an_qi")), Seq("cc"), "left")
-      .select(col("id"), col("qi"), lit(null).cast("long").as("component"),
-        col("an_qi"), col("an_err"))
-
-    // carry any extra input columns (e.g. the preserved label) through
-    val extras = points.columns.toSeq
-      .filterNot(n => n == idCol || n == qiCol || weightCol.contains(n))
-    val base = memberAssigned.unionByName(noiseAssigned)
-      .withColumn("is_noise", col("component").isNull)
-    val assignments = (if (extras.isEmpty) base
-      else base.join(
-        points.select((col(idCol).cast("long").as("id") +: extras.map(col)): _*),
-        "id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    c.labeled.unpersist()
-    val r = c.records.head
-    DbscanModel(assignments, c.centroids, r.nClusters, r.nNoise,
-      r.clusterError, r.noiseError)
+    publish(c, 0, points, idCol, qiCol, weightCol)
   }
 
   /** Reference-faithful value-collapsed mode: rows are deduplicated into
@@ -412,13 +430,15 @@ object Dbscan {
     * pays one shuffle instead of |epsRange|. The reference hoists only the
     * vertices DF out of its loop (DBSCAN.py:157); this hoists the join too.
     *
-    * The per-ε RECORDS then come from one batched [[cluster]] pass in
+    * The per-ε records then come from one batched [[cluster]] pass in
     * every [[ClusterMode]]: each pair is tagged with every radius that
     * admits it, and all radii's graphs are clustered as one disjoint union
-    * (one set of CC rounds instead of |epsRange|) — only the winning ε's
-    * full model is built, by [[run]] over its slice. Only when the
-    * namespaced ids would overflow a Long does the same pass run once per
-    * ε.
+    * (one set of CC rounds instead of |epsRange|). The winning ε's model
+    * is published from its block of that same pass ([[publish]]), so the
+    * winner's record and the model are one computation; the losing blocks
+    * are released. Only when the namespaced ids would overflow a Long
+    * does the same pass run once per ε, keeping only the best pass so
+    * far.
     *
     * @param runner optional per-ε model source — lets callers with a
     *   model cache (e.g. the gate registry, which memoizes one ε already)
@@ -463,34 +483,36 @@ object Dbscan {
           posexplode(array(epsRange.map(lit(_)): _*)).as(Seq("ei", "epsv")))
         .where(col("d") < col("epsv"))
         .select(col("ei"), col("a_id"), col("a_w"), col("b_id"), col("b_w"))
+      // the best block so far (its pass and index) stays persisted until
+      // it is published; every other pass is released as soon as its
+      // records are in. Ties keep the earlier radius.
+      var kept: Option[(Clustered, Int)] = None
+      def err(b: (Clustered, Int)) = b._1.records(b._2).totalError
       def pass(t: DataFrame, blocks: Blocks): Seq[SweepRecord] = {
         val c = cluster(pts.select("id", "qi"), t, blocks, minPts, k, mode)
-        c.labeled.unpersist(); c.centroids.unpersist()
+        val finite = c.records.indices
+          .filter(c.records(_).totalError.isFinite).map((c, _))
+        val winner = (kept ++ finite)
+          .reduceOption((a, b) => if (err(b) < err(a)) b else a)
+        for ((old, _) <- kept if !winner.exists(_._1 eq old)) old.release()
+        if (!winner.exists(_._1 eq c)) c.release()
+        kept = winner
         c.records
       }
       val span = Try(Math.addExact(Math.subtractExact(maxId, minId), 1L))
         .filter(s => Try(Math.multiplyExact(s, epsRange.length.toLong)).isSuccess)
-      val batched = span.toOption match {
+      val recs = try span.toOption match {
         case Some(s) => pass(tagged, Blocks(epsRange, minId, s))
         case None => epsRange.indices.flatMap(ei =>
           pass(tagged.where(col("ei") === ei), Blocks(Seq(epsRange(ei)))))
+      } catch { case t: Throwable => kept.foreach(_._1.release()); throw t }
+      val best = kept.map { case (c, ei) =>
+        (c.blocks.eps(ei), publish(c, ei, points, idCol, qiCol, weightCol))
       }
-      // the batched pass is shared work — per-ε attribution is an even
-      // split; the winning ε's record additionally carries its (only)
-      // full model build, approximating the reference's per-ε timing
+      // the pass and the winner's build are shared work — per-ε
+      // attribution is an even split
       val secs = (System.nanoTime() - t0) / 1e9
-      val recs = batched.map(_.copy(seconds = secs / epsRange.length))
-      val bestEps = recs.filter(_.totalError.isFinite)
-        .reduceOption((a, b) => if (b.totalError < a.totalError) b else a)
-        .map(_.eps)
-      val t1 = System.nanoTime()
-      val best = bestEps.map(eps =>
-        (eps, run(points, idCol, qiCol, eps, minPts, k, mode, weightCol,
-          blockDims, pairsOpt = Some(sharedMax.where(col("d") < eps)))))
-      val buildSecs = (System.nanoTime() - t1) / 1e9
-      (recs.map(r =>
-        if (bestEps.contains(r.eps)) r.copy(seconds = r.seconds + buildSecs)
-        else r), best)
+      (recs.map(_.copy(seconds = secs / epsRange.length)), best)
     } finally sharedMax.unpersist()
   }
 

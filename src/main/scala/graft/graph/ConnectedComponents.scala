@@ -1,13 +1,12 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** DataFrame-native connected components via the alternating
   * large-star / small-star algorithm (Kiveris et al., "Connected Components
   * in MapReduce and Beyond", SOCC'14) — O(log n) rounds, each round two
-  * window-min passes over the edge list (one shuffle each), so it scales to
+  * per-source-min passes over the edge list, so it scales to
   * graphs that GraphX's Pregel CC would need a real cluster for, and it
   * never materializes components on the driver.
   *
@@ -26,8 +25,7 @@ object ConnectedComponents {
     *         Isolated vertices (absent from `edges`) are the caller's to
     *         re-add (`coalesce(component, id)` after an outer join).
     */
-  def run(edges: DataFrame, maxIter: Int = 64,
-          skewSafe: Boolean = true): DataFrame = {
+  def run(edges: DataFrame, maxIter: Int = 64): DataFrame = {
     // checkpoints are LAZY: the checksum that every round needs anyway is
     // the action that materializes them, so each round schedules ONE job
     // (checkpoint-fill + checksum fused) instead of two — rounds are pure
@@ -44,28 +42,15 @@ object ConnectedComponents {
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      // Per-source minima come from a window over the edge partition, not
-      // a groupBy + self-join: the min-agg form exchanged the edge list
-      // twice per star phase (once into the aggregate, once to co-locate
-      // the join), the window form once (plus an in-partition sort) —
-      // with two phases per round that's 2 shuffles instead of 4 of the
-      // full edge set.
-      //
-      // SKEW CEILING: a window partition gets no map-side partial
-      // aggregation, so a component root's full adjacency — which grows
-      // toward the whole component as stars contract — sorts in ONE
-      // window task. Near-dup graphs at data scale are power-law
-      // (boilerplate/template mega-components), so the combining form is
-      // the DEFAULT: per-src min via a map-side-combined groupBy (hash
-      // partials absorb a hot root BEFORE the exchange) joined back on
-      // src — 2 extra shuffles of the edge set per round but no
-      // single-task hotspot. skewSafe=false keeps the cheaper window-min
-      // form (2 shuffles/round instead of 4) for degree-bounded graphs
-      // like DBSCAN ε-grids, and serves as the spec cross-check.
-      val perSrcMin = Window.partitionBy("src")
+      // Per-source minima come from a map-side-combined groupBy joined
+      // back on src, not a window over the edge partition: a window
+      // partition gets no partial aggregation, so a component root's full
+      // adjacency — which grows toward the whole component as stars
+      // contract — would sort in ONE task. Near-dup graphs at data scale
+      // are power-law (boilerplate/template mega-components); the hash
+      // partials absorb a hot root BEFORE the exchange.
       def withSrcMin(df: DataFrame): DataFrame =
-        if (!skewSafe) df.withColumn("m", min("dst").over(perSrcMin))
-        else df.join(df.groupBy("src").agg(min("dst").as("m")), "src")
+        df.join(df.groupBy("src").agg(min("dst").as("m")), "src")
 
       // Large-star: for each node u, attach every strictly-larger neighbor
       // to the minimum of Γ(u) ∪ {u}.

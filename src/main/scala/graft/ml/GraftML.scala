@@ -215,7 +215,7 @@ object GraftDbscan extends DefaultParamsReadable[GraftDbscan]
   *
   * Two centroid stores, chosen by the element budget: under
   * [[Dbscan.MaxAssignElements]] the matrix is driver-collected
-  * (`centroids`, argmin via the kernel/pruned codegen regimes); above it
+  * (`centroids`, argmin via the pruned-exact kernel); above it
   * `centroidsDf` holds the centroid TABLE (localCheckpoint storage —
   * distributed, never driver-resident) and transform routes unseen rows
   * through the distributed-exact probe join
@@ -230,10 +230,6 @@ class GraftDbscanModel private[ml] (override val uid: String,
                                     @transient val centroidsDf: Option[DataFrame] = None)
   extends Model[GraftDbscanModel] with GraftClusterParams with MLWritable {
 
-  /** Kernel-vs-broadcast-join regime threshold — the engine's cap,
-    * overridable only by specs (to force the fallback at test scale). */
-  private[graft] var kernelCap: Int = Dbscan.KernelAssignMaxClusters
-
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema)
     val df = dataset.toDF()
@@ -242,11 +238,9 @@ class GraftDbscanModel private[ml] (override val uid: String,
       col("component").as("__fit_comp"))
     val joined = in.join(asg,
       in(($(idCol))).cast("long") === asg("__fit_id"), "left")
-    // same regime split as the engine's noise assign: the kernel path's
-    // component-decode literal array bloats the plan past ~8k clusters,
-    // so the triangle-inequality-pruned exact argmin takes over there —
-    // identical labels, probe-bounded O(√k·dim) per row instead of the
-    // old broadcast-crossJoin's rows x k candidate blow-up
+    // same regimes as the engine's noise assign: the pruned-exact argmin
+    // over the driver-held matrix, probe-bounded O(√k·dim) per row
+    // instead of a broadcast crossJoin's rows x k candidate blow-up
     val withNearest = centroidsDf match {
       case Some(cdf) =>
         // table-backed regime: nothing collects or broadcasts — the
@@ -257,9 +251,6 @@ class GraftDbscanModel private[ml] (override val uid: String,
           .drop("__nn_cent")
       case None if centroids.isEmpty =>
         joined.withColumn("__nn_comp", lit(null).cast("long"))
-      case None if centroids.size <= kernelCap =>
-        Dbscan.withKernelNearest(joined, "__qi", centroids,
-          "__nn_comp", "__nn_d")
       case None =>
         Dbscan.withPrunedNearest(joined, "__qi", centroids,
           "__nn_comp", "__nn_d")

@@ -38,17 +38,15 @@ class ConnectedComponentsSpec extends GraftSuite {
     assert(leaked.size <= 1, s"per-round checkpoints leaked: $leaked")
   }
 
-  test("skewSafe combining form labels identically to the window form") {
-    // hot-root star (the skew case the combining form exists for),
-    // a chain, and a detached pair. The combining form is the production
-    // default since round 9; the window form stays as the cross-check.
+  test("hot-root star, chain and detached pair get their min-id labels") {
+    // the hot-root star is the skew case the map-side-combined per-source
+    // min exists for: its root's adjacency is the whole component
     val star = (2L to 40L).map(i => (1L, i))
-    val edges = (star ++ Seq((41L, 42L), (42L, 43L), (100L, 101L))).toSeq
-    val c = cc(edges) // default = skewSafe combining form
-    val w = ConnectedComponents.run(edges.toDF("src", "dst"),
-        skewSafe = false)
-      .as[(Long, Long)].collect().toMap
-    assert(c == w, s"forms diverge: ${c.toSeq.sorted} vs ${w.toSeq.sorted}")
+    val edges = star ++ Seq((41L, 42L), (42L, 43L), (100L, 101L))
+    val want = (1L to 40L).map(_ -> 1L) ++ (41L to 43L).map(_ -> 41L) ++
+      Seq(100L -> 100L, 101L -> 100L)
+    val got = cc(edges)
+    assert(got == want.toMap, s"labels: ${got.toSeq.sorted}")
   }
 
   test("matches GraphX CC on random graphs") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.dbscan.{Cc, CcGraphX, ClusterMode, Dbscan, Scc}
+import graft.dbscan.{Cc, ClusterMode, Dbscan, DbscanModel, Scc}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -83,14 +83,6 @@ class DbscanSpec extends GraftSuite {
     assert(m.nNoise == 0, "Q is a border point absorbed by CC")
   }
 
-  test("all three modes agree on the two-blob data") {
-    val a = Dbscan.run(twoBlobs, "id", "qi", 4.0, 3, 3, Cc)
-    val b = Dbscan.run(twoBlobs, "id", "qi", 4.0, 3, 3, CcGraphX)
-    val ids = (m: graft.dbscan.DbscanModel) =>
-      m.assignments.select("id", "component").as[(Long, Option[Long])].collect().toMap
-    assert(ids(a) == ids(b))
-  }
-
   test("sweep records empty-edge epsilons as [eps,0,n,0,inf,inf] and picks argmin") {
     val (recs, best) = Dbscan.sweep(twoBlobs, "id", "qi",
       epsRange = Seq(0.1, 4.0), minPts = 3, k = 3)
@@ -105,7 +97,9 @@ class DbscanSpec extends GraftSuite {
     // the sweep computes pairs ONCE at max(eps), slices d < eps per radius
     // and clusters every radius in one batched pass; every record must
     // match an independent full run at that radius exactly, in every
-    // mode. Negative ids are namespaced relative to the minimum id; ids
+    // mode, and the winning model — published from its block of that
+    // same pass — must equal a fresh run at the winning radius row for
+    // row. Negative ids are namespaced relative to the minimum id; ids
     // spanning the whole Long range overflow the namespace and take the
     // per-eps pass.
     val shifted = twoBlobs.select((col("id") - 100L).as("id"), col("qi"))
@@ -116,37 +110,94 @@ class DbscanSpec extends GraftSuite {
     // (points, label, mode, minPts, k, blockDims, epsRange)
     val inputs = Seq(
       (twoBlobs, "twoBlobs", Cc, 3, 3, 2, Seq(0.5, 1.5, 4.0)),
-      (twoBlobs, "twoBlobs", CcGraphX, 3, 3, 2, Seq(0.5, 1.5, 4.0)),
       (twoBlobs, "twoBlobs", Scc, 3, 3, 2, Seq(0.5, 1.5, 4.0)),
       (borderChain, "borderChain", Cc, 4, 4, 1, Seq(0.4, 1.2, 2.0)),
-      (borderChain, "borderChain", CcGraphX, 4, 4, 1, Seq(0.4, 1.2, 2.0)),
       (borderChain, "borderChain", Scc, 4, 4, 1, Seq(0.4, 1.2, 2.0)),
       (shifted, "twoBlobs ids-100", Cc, 3, 3, 2, Seq(0.5, 1.5, 4.0)),
       (shifted, "twoBlobs ids-100", Scc, 3, 3, 2, Seq(0.5, 1.5, 4.0)),
       (extreme, "twoBlobs full-range ids", Cc, 3, 3, 2, Seq(0.5, 1.5, 4.0)))
     val recsOf = scala.collection.mutable.Map
       .empty[(String, ClusterMode), Seq[(Long, Long, Double, Double)]]
+    // (label, winning block index, minimum id) of every batched sweep
+    val winners = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Long)]
+    def assignmentRows(m: DbscanModel) = m.assignments
+      .select("id", "component", "is_noise", "an_qi", "an_err").orderBy("id")
+      .as[(Long, Option[Long], Boolean, Option[Seq[Double]], Option[Double])]
+      .collect().toSeq
+    def centroidRows(m: DbscanModel) = m.centroids
+      .select("component", "centroid", "n_members").orderBy("component")
+      .as[(Long, Seq[Double], Long)].collect().toSeq
+    def numbers(m: DbscanModel) =
+      (m.nClusters, m.nNoise, m.clusterError, m.noiseError)
     for ((pts, label, mode, minPts, k, bd, epsRange) <- inputs) {
       val n = pts.count()
       val (recs, best) = Dbscan.sweep(pts, "id", "qi", epsRange, minPts, k,
         mode, blockDims = bd)
-      best.foreach(_._2.unpersist())
-      for ((eps, rec) <- epsRange.zip(recs)) {
-        val m = Dbscan.run(pts, "id", "qi", eps, minPts, k, mode,
-          blockDims = bd)
-        val fresh =
-          if (m.nClusters == 0 && m.nNoise == n && m.clusterError == 0.0)
-            (0L, n, 0.0, Double.PositiveInfinity)
-          else (m.nClusters, m.nNoise, m.clusterError, m.noiseError)
-        assert((rec.nClusters, rec.nNoise, rec.clusterError, rec.noiseError)
-          == fresh, s"$label $mode eps=$eps: sliced sweep != fresh run")
-        m.unpersist()
-      }
+      val (bestEps, won) = best.getOrElse(fail(s"$label $mode: no winner"))
+      try {
+        val win = recs.find(_.eps == bestEps).get
+        assert((win.nClusters, win.nNoise, win.clusterError, win.noiseError)
+          == numbers(won), s"$label $mode: winner's record != its model")
+        if (label != "twoBlobs full-range ids")
+          winners += ((label, epsRange.indexOf(bestEps),
+            pts.agg(min("id")).as[Long].head()))
+        for ((eps, rec) <- epsRange.zip(recs)) {
+          val m = Dbscan.run(pts, "id", "qi", eps, minPts, k, mode,
+            blockDims = bd)
+          try {
+            val fresh =
+              if (m.nClusters == 0 && m.nNoise == n && m.clusterError == 0.0)
+                (0L, n, 0.0, Double.PositiveInfinity)
+              else numbers(m)
+            assert((rec.nClusters, rec.nNoise, rec.clusterError,
+              rec.noiseError) == fresh,
+              s"$label $mode eps=$eps: sliced sweep != fresh run")
+            if (eps == bestEps) {
+              assert(assignmentRows(won) == assignmentRows(m),
+                s"$label $mode eps=$eps: winner's assignments != fresh run")
+              assert(centroidRows(won) == centroidRows(m),
+                s"$label $mode eps=$eps: winner's centroids != fresh run")
+              assert(numbers(won) == numbers(m),
+                s"$label $mode eps=$eps: winner's numbers != fresh run")
+            }
+          } finally m.unpersist()
+        }
+      } finally won.unpersist()
       recsOf((label, mode)) =
         recs.map(r => (r.nClusters, r.nNoise, r.clusterError, r.noiseError))
     }
     assert(recsOf(("borderChain", Cc)) != recsOf(("borderChain", Scc)),
       "the chain fixture must separate CC from SCC")
+    assert(winners.exists { case (_, ei, minId) => ei > 0 && minId != 0 },
+      s"no batched winner exercises the id mapping: $winners")
+  }
+
+  test("a sweep's caches end with its model: none stay after unpersist, " +
+      "none when no radius wins") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (_, best) = Dbscan.sweep(twoBlobs, "id", "qi",
+      epsRange = Seq(0.5, 1.5, 4.0), minPts = 3, k = 3)
+    val m = best.map(_._2).getOrElse(fail("twoBlobs must have a winner"))
+    // what the model publishes is materialized while its sources live:
+    // reading it builds no new cache and never recomputes the released
+    // clustering pass
+    val held = sc.getPersistentRDDs.keySet -- before
+    m.assignments.count(); m.centroids.count()
+    val cached = sc.getRDDStorageInfo.map(i => i.id -> i).toMap
+    assert(sc.getPersistentRDDs.keySet -- before == held,
+      "reading the model built a cache the sweep left lazy")
+    assert(held.nonEmpty && held.forall(id => cached.get(id)
+      .exists(i => i.numCachedPartitions == i.numPartitions)),
+      s"model frames not fully cached: ${held.map(cached.get)}")
+    m.unpersist()
+    assert(sc.getPersistentRDDs.keySet -- before == Set.empty,
+      "a published sweep stranded a cache")
+    val (recs, none) = Dbscan.sweep(twoBlobs, "id", "qi",
+      epsRange = Seq(0.1), minPts = 3, k = 3)
+    assert(none.isEmpty && recs.head.totalError.isPosInfinity)
+    assert(sc.getPersistentRDDs.keySet -- before == Set.empty,
+      "a sweep with no winner stranded a cache")
   }
 
   test("runner-served models stay persisted: the sweep never unpersists them") {

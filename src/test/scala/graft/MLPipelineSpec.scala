@@ -154,37 +154,46 @@ class MLPipelineSpec extends GraftSuite {
       st.getOrDefault(st.minPts) == MinPts)
   }
 
-  test("dbscan transform: pruned-argmin fallback == kernel path label-for-label") {
-    // past the engine's 8192-cluster cap the component-decode literal
-    // would bloat the plan, so transform switches to the triangle-
-    // inequality-pruned exact argmin — force it at test scale and
-    // require label equality plus a plan with NO rows x k join
+  test("dbscan transform: pruned argmin == exhaustive nearest_centroids scan") {
+    // transform scores unfitted rows with the triangle-inequality-pruned
+    // exact argmin; an exhaustive nearest_centroids scan over the same
+    // matrix (ties → lowest component id) is the oracle, and the plan
+    // must hold NO rows x k join
     val model = new GraftDbscan().setIdCol("id").setFeaturesCol("features")
       .setEps(Eps).setMinPts(MinPts).fit(assembled)
     assert(model.centroids.nonEmpty)
-    val viaKernel = model.transform(assembled)
-      .select("id", "prediction").as[(Long, Option[Long])].collect().toSet
-    model.kernelCap = 0 // every size now exceeds the "cap"
-    val pruned = model.transform(assembled)
-    val plan = pruned.queryExecution.executedPlan.toString
+    val qi = assembled.withColumn("qi",
+      graft.functions.Distances.pack(col("x0"), col("x1")))
+    val comps = model.centroids.map(_._1)
+    val exhaustive = qi.withColumn("nc", element_at(
+        graft.functions.VecKernels.nearest_centroids(col("qi"),
+          model.centroids.indices.map(i => i -> model.centroids(i)._2), 1,
+          cosine = false), 1))
+      .select("id", "nc.cluster").as[(Long, Int)].collect()
+      .map { case (id, i) => id -> comps(i) }.toMap
+    val fitted = model.assignments.select("id", "component")
+      .as[(Long, Option[Long])].collect().toMap
+    val out = model.transform(assembled)
+    val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"pruned path still materializes rows x k:\n$plan")
     assert(plan.contains("pruned_nearest"), "pruned kernel not in the plan")
-    val viaJoin = pruned
-      .select("id", "prediction").as[(Long, Option[Long])].collect().toSet
-    assert(viaJoin == viaKernel, "fallback argmin diverged from the kernel")
-    // the fallback really scores unseen rows too (nearest-centroid)
-    val member = model.transform(assembled)
-      .where(col("prediction").isNotNull)
-      .select("x0", "x1", "prediction").head()
-    val unseen = Seq((8888888L, member.getDouble(0), member.getDouble(1)))
-      .toDF("id", "x0", "x1")
-    val out = model.transform(
+    val labels = out.select("id", "prediction").as[(Long, Option[Long])]
+      .collect().toMap
+    // fitted ids keep their DBSCAN label; only unfitted ids are argmin'd
+    assert(labels == fitted, "transform changed a fitted id's label")
+    // unseen rows: the pruned argmin agrees with the exhaustive scan
+    val unseen = assembled.select(col("x0"), col("x1"))
+      .withColumn("id", monotonically_increasing_id() + 9000000L)
+    val viaPruned = model.transform(
       new VectorAssembler().setInputCols(Array("x0", "x1"))
         .setOutputCol("features").transform(unseen))
-      .select("prediction").as[Option[Long]].head()
-    assert(out.contains(member.getLong(2)))
+      .select("x0", "x1", "prediction").as[(Double, Double, Option[Long])]
+      .collect().map(r => (r._1, r._2) -> r._3).toMap
+    val byPoint = assembled.select("id", "x0", "x1").as[(Long, Double, Double)]
+      .collect().map(r => (r._2, r._3) -> Option(exhaustive(r._1))).toMap
+    assert(viaPruned == byPoint, "pruned argmin diverged from the exhaustive scan")
     model.release()
   }
 
