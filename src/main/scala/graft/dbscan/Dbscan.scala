@@ -136,6 +136,22 @@ object Dbscan {
     def release(): Unit = { labeled.unpersist(); centroids.unpersist() }
   }
 
+  /** DBSCAN's directed core → neighbour edges (flattenPair,
+    * DBSCAN.py:119-124,162) over ε-pairs (a_id, a_w, b_id, b_w). Core
+    * test: the reference's cartesian keys pairs on the point VALUE, so a
+    * point with c duplicate copies sees each neighbor c times — its
+    * neighbor list is c·Σw_b long. Weighted mode reproduces that as
+    * a_w · Σ(b_w) ≥ minPts; unweighted rows have a_w = b_w = 1. */
+  private[graft] def coreEdges(pairs: DataFrame, minPts: Int): DataFrame = {
+    val core = pairs.groupBy(col("a_id"), col("a_w"))
+      .agg(sum("b_w").as("nw"))
+      .where(col("a_w") * col("nw") >= minPts)
+      .select(col("a_id").as("core_id"))
+    pairs
+      .join(core, pairs("a_id") === core("core_id"), "left_semi")
+      .select(col("a_id").as("src"), col("b_id").as("dst"))
+  }
+
   /** The DBSCAN pipeline over ε-tagged pairs (ei, a_id, a_w, b_id, b_w),
     * each step written once for [[run]] (one block) and [[sweep]] (every
     * radius in one pass, the winner published from it): weighted core
@@ -151,20 +167,7 @@ object Dbscan {
       blocks.vertex(col("ei"), col("a_id")).as("a_id"), col("a_w"),
       blocks.vertex(col("ei"), col("b_id")).as("b_id"), col("b_w"))
 
-    // Core test: the reference's cartesian keys pairs on the point VALUE,
-    // so a point with c duplicate copies sees each neighbor c times — its
-    // neighbor list is c·Σw_b long. Weighted mode reproduces that as
-    // a_w · Σ(b_w) ≥ minPts; unweighted rows have a_w = 1.
-    val core = pairs.groupBy(col("a_id"), col("a_w"))
-      .agg(sum("b_w").as("nw"))
-      .where(col("a_w") * col("nw") >= minPts)
-      .select(col("a_id").as("core_id"))
-
-    // Directed edges core → neighbor (flattenPair, DBSCAN.py:119-124,162).
-    val edges = pairs
-      .join(core, pairs("a_id") === core("core_id"), "left_semi")
-      .select(col("a_id").as("src"), col("b_id").as("dst"))
-
+    val edges = coreEdges(pairs, minPts)
     val comp = mode match {
       case Cc => ConnectedComponents.run(edges)
       case Scc => GraphAlgs.dbscanScc(edges)
@@ -439,22 +442,13 @@ object Dbscan {
     * are released. Only when the namespaced ids would overflow a Long
     * does the same pass run once per ε, keeping only the best pass so
     * far.
-    *
-    * @param runner optional per-ε model source — lets callers with a
-    *   model cache (e.g. the gate registry, which memoizes one ε already)
-    *   serve that ε from the cache while the sweep computes the argmin.
-    *   With a runner there is no batched pass: every record comes from
-    *   the runner's model. Runner-served models belong to the caller —
-    *   the sweep never unpersists them, winning or losing.
     */
   def sweep(points: DataFrame, idCol: String, qiCol: String,
             epsRange: Seq[Double], minPts: Int, k: Int,
             mode: ClusterMode = Cc, weightCol: Option[String] = None,
-            blockDims: Int = 2,
-            runner: Double => DbscanModel = null)
+            blockDims: Int = 2)
   : (Seq[SweepRecord], Option[(Double, DbscanModel)]) = {
     if (epsRange.isEmpty) return (Seq.empty, None)
-    if (runner != null) return sweepWith(points, epsRange, runner)
     val w = weightCol.map(col).getOrElse(lit(1L)).cast("long")
     val pts = points.select(col(idCol).cast("long").as("id"),
       col(qiCol).as("qi"), w.as("w"))
@@ -514,41 +508,5 @@ object Dbscan {
       val secs = (System.nanoTime() - t0) / 1e9
       (recs.map(_.copy(seconds = secs / epsRange.length)), best)
     } finally sharedMax.unpersist()
-  }
-
-  /** The per-ε loop behind a caller's `runner`: one model per radius, the
-    * argmin kept. Models are the runner's, so none is unpersisted here. */
-  private def sweepWith(points: DataFrame, epsRange: Seq[Double],
-                        runner: Double => DbscanModel)
-  : (Seq[SweepRecord], Option[(Double, DbscanModel)]) = {
-    val n = points.count()
-    var best: Option[(Double, DbscanModel)] = None
-    var minCost = Double.PositiveInfinity
-    val records = epsRange.map { eps =>
-      val t0 = System.nanoTime()
-      val m = runner(eps)
-      val secs = (System.nanoTime() - t0) / 1e9
-      val rec =
-        if (m.nClusters == 0 && m.nNoise == n && m.clusterError == 0.0)
-          SweepRecord(eps, 0, n, 0.0, Double.PositiveInfinity,
-            Double.PositiveInfinity, secs)
-        else
-          SweepRecord(eps, m.nClusters, m.nNoise, m.clusterError,
-            m.noiseError, m.totalError, secs)
-      if (rec.totalError < minCost) {
-        minCost = rec.totalError
-        best = Some((eps, m))
-      }
-      rec
-    }
-    (records, best)
-  }
-
-  /** Sweep metrics as a DataFrame matching the reference's eps_record.csv
-    * columns (DBSCAN.py:137). */
-  def sweepMetrics(spark: org.apache.spark.sql.SparkSession,
-                   records: Seq[SweepRecord]): DataFrame = {
-    import spark.implicits._
-    records.toDF()
   }
 }

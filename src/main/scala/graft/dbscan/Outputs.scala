@@ -48,12 +48,8 @@ object Outputs {
   def writeKmeansParquet(model: graft.kmeans.KMeansModel, headers: Seq[String],
                          path: String): Unit = {
     val dim = headers.length
-    val centMap = map(model.centroids.toSeq.sortBy(_._1).flatMap { case (c, arr) =>
-      Seq(lit(c), array(arr.map(lit(_)): _*))
-    }: _*)
-    model.assignment
-      .select(element_at(centMap, col("cluster")).as("c"))
-      .select((0 until dim).map(i => element_at(col("c"), i + 1).as(headers(i))): _*)
+    graft.kmeans.ConstrainedKMeans.anonymized(model, dim)
+      .select((0 until dim).map(i => element_at(col("an_qi"), i + 1).as(headers(i))): _*)
       .write.mode(SaveMode.Overwrite).parquet(path)
   }
 

@@ -45,29 +45,21 @@ object ConstrainedKMeans {
   /** Nearest centroid as a single narrow projection — no shuffle, no
     * crossJoin, no UDF. The centroid matrix rides as a codegen reference
     * object ([[graft.functions.VecKernels.nearest_centroids]]), so the
-    * plan stays O(1)-sized and codegen'd at any cluster count (the literal
-    * `aggregate` fold, kept below as the spec cross-check, hits the JVM
-    * 64KB codegen limit past a few hundred centroids). Ties keep the
-    * lowest cluster index in both forms. */
+    * plan stays O(1)-sized and codegen'd at any cluster count (a literal
+    * `aggregate` fold — ConstrainedKMeansSpec's cross-check — hits the
+    * JVM 64KB codegen limit past a few hundred centroids). Ties keep the
+    * lowest cluster index. */
   private def nearestCentroid(qi: Column, cents: Seq[(Int, Array[Double])]): Column =
     element_at(
       graft.functions.VecKernels.nearest_centroids(qi, cents, 1, cosine = false), 1)
 
-  /** The round-1 literal-fold form — bit-equal to [[nearestCentroid]]
-    * (asserted in ConstrainedKMeansSpec); retained as the declarative
-    * oracle of the native kernel. */
-  private[graft] def nearestCentroidFold(qi: Column,
-                                         cents: Seq[(Int, Array[Double])]): Column = {
-    val centArr = array(cents.sortBy(_._1).map { case (cid, c) =>
-      struct(lit(cid).as("cluster"), array(c.map(lit(_)): _*).as("centroid"))
-    }: _*)
-    val init = struct(lit(-1).as("cluster"), lit(Double.PositiveInfinity).as("d"))
-    aggregate(centArr, init, (acc, ctr) => {
-      val d = Distances.l1(qi, ctr.getField("centroid"))
-      when(d < acc.getField("d"),
-        struct(ctr.getField("cluster").as("cluster"), d.as("d"))).otherwise(acc)
-    })
-  }
+  /** The centroid of each row's `cluster`, as an `array<double>` column:
+    * a lookup in a literal cluster → centroid map. */
+  private def centroidOf(centroids: Map[Int, Array[Double]],
+                         cluster: Column): Column =
+    element_at(map(centroids.toSeq.sortBy(_._1).flatMap { case (cid, c) =>
+      Seq(lit(cid), array(c.map(lit(_)): _*))
+    }: _*), cluster)
 
   /** One (nClusters, init) fit: Lloyd loop with k-member repair. */
   def fit(points: DataFrame, idCol: String, qiCol: String, nClusters: Int,
@@ -176,11 +168,8 @@ object ConstrainedKMeans {
 
       // cost vs NEW centroids (distance to the OWN cluster's centroid, not
       // the nearest one), in one declarative pass over a literal map
-      val centMap = map(newCentroids.toSeq.sortBy(_._1).flatMap { case (cid, c) =>
-        Seq(lit(cid), array(c.map(lit(_)): _*))
-      }: _*)
       val cost = assignment
-        .select(sum(Distances.l1(col("qi"), element_at(centMap, col("cluster")))))
+        .select(sum(Distances.l1(col("qi"), centroidOf(newCentroids, col("cluster")))))
         .head().getDouble(0)
 
       if (model == null || cost < model.cost) {
@@ -262,11 +251,7 @@ object ConstrainedKMeans {
 
   /** The reference's output shape: one row per input point carrying its
     * cluster's centroid (write_to_output → output.txt parquet). */
-  def anonymized(model: KMeansModel, dim: Int): DataFrame = {
-    val centMap = map(model.centroids.toSeq.sortBy(_._1).flatMap { case (cid, c) =>
-      Seq(lit(cid), array(c.map(lit(_)): _*))
-    }: _*)
+  def anonymized(model: KMeansModel, dim: Int): DataFrame =
     model.assignment.select(col("id"),
-      element_at(centMap, col("cluster")).as("an_qi"))
-  }
+      centroidOf(model.centroids, col("cluster")).as("an_qi"))
 }

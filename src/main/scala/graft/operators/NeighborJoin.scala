@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * single scalability cliff of the reference (its 2 GB VM OOM'd on 10k rows,
   * hs_err_pid*.log).
   *
-  * We keep the cartesian form as the semantics oracle and default to
+  * The cartesian form is the specs' semantics oracle; the engine uses
   * **grid-cell blocking**: bucket each point by `floor(x_i / eps)` on up to
   * `blockDims` leading dimensions, replicate one side to the 3^blockDims
   * neighboring cells, equi-join on the cell key (hash join, shuffle on the
@@ -75,16 +75,6 @@ object NeighborJoin {
       case Some(dc) => joined.withColumn(dc, d)
         .where(col(dc) < eps).drop("a_cell", "b_cell")
     }
-  }
-
-  /** Reference-faithful O(n²) oracle: crossJoin + θ-filter (DBSCAN.py:161).
-    * Used only in tests to validate [[epsJoinGrid]] and at tiny scale.
-    */
-  def epsJoinCross(df: DataFrame, idCol: String, ptCol: String, eps: Double): DataFrame = {
-    val cols = df.columns.toSeq
-    val a = df.select(cols.map(c => col(c).as(s"a_$c")): _*)
-    val b = df.select(cols.map(c => col(c).as(s"b_$c")): _*)
-    a.crossJoin(b).where(Distances.l1(col(s"a_$ptCol"), col(s"b_$ptCol")) < eps)
   }
 
   /** Per-point ε-neighbor count (self included): the first half of the DBSCAN

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.core.QueryCache
 import graft.core.Tables.table
-import graft.dbscan.{Cc, Dbscan, DbscanModel, Scc}
+import graft.dbscan.{Cc, Dbscan, Scc}
 import graft.functions.Distances
 import graft.graph.{ConnectedComponents, GraphAlgs, Traversals}
 import graft.operators.NeighborJoin
@@ -75,20 +75,16 @@ object ClusterQueries {
         .localCheckpoint()
     }
 
-  /** Directed core→neighbor edge list of the ε-graph (DBSCAN.py:161-162),
-    * derived from [[sharedPairs]]; three gate queries (cc_components,
-    * cc_graphx, scc_components) walk the same graph, so the finished edge
-    * list is eagerly localCheckpoint'd once per (session, dir) too. */
+  /** Directed core→neighbor edge list of the ε-graph (DBSCAN.py:161-162):
+    * the engine's core rule ([[Dbscan.coreEdges]]) over [[sharedPairs]],
+    * whose unit weights make it the plain `count ≥ minPts` test. Three
+    * gate queries (cc_components, cc_graphx, scc_components) walk the
+    * same graph, so the finished edge list is eagerly localCheckpoint'd
+    * once per (session, dir) too. */
   private[graft] val EdgesKey = "cluster.epsEdges"
   private def epsEdges(s: SparkSession, dir: String): DataFrame =
     QueryCache.shared(EdgesKey, s, dir) {
-      val pairs = sharedPairs(s, dir)
-      val core = pairs.groupBy("a_id").agg(count(lit(1)).as("n"))
-        .where(col("n") >= minPts).select(col("a_id").as("core_id"))
-      pairs
-        .join(core, pairs("a_id") === core("core_id"), "left_semi")
-        .select(col("a_id").as("src"), col("b_id").as("dst"))
-        .localCheckpoint()
+      Dbscan.coreEdges(sharedPairs(s, dir), minPts).localCheckpoint()
     }
 
   /** The ε=2.0 DBSCAN model shared by dbscan_labels / dbscan_errors /
@@ -690,33 +686,26 @@ object ClusterQueries {
         .crossJoin(p.agg(count(lit(1)).as("n_kmeans")))
     }),
 
-    // E1: the reference's whole entry point — ε sweep with argmin
-    // selection (DBSCAN.py:157-205). Deterministic metrics (seconds
-    // dropped); rows-only gate + sweep-shape specs.
+    // E1: the per-ε records of the reference's whole entry point, the ε
+    // sweep (DBSCAN.py:157-205), with seconds dropped so the rows are
+    // deterministic. E1's legs are read from per-ε models, not from
+    // `Dbscan.sweep`: ε=2.0 is the shared model cache entry (it stays
+    // persisted — it IS the entry); ε=0.5 is a run over the d<ε slice of
+    // the SAME cached pair set (subset property) rather than a fresh
+    // join, released once read. A model's numbers are its ε-block's sweep
+    // record, so a clusterless leg reads noiseError = ∞.
     "dbscan_sweep" -> ((s, dir) => {
       import s.implicits._
-      // the ε=2.0 leg is served from the shared model cache; smaller ε
-      // legs are d<ε slices of the SAME cached pair set (subset property)
-      // rather than fresh joins. Runner-served models are ours: the cached
-      // ε=2.0 model stays persisted (it IS the cache entry), the ones
-      // built here are released once the records are in.
-      val built = scala.collection.mutable.ArrayBuffer.empty[DbscanModel]
-      val (recs, _) = try Dbscan.sweep(pts(s, dir), "id", "qi",
-        epsRange = Seq(0.5, 2.0), minPts = minPts, k = kAnon,
-        runner = e =>
-          if (e == eps) sharedModel(s, dir)
-          else {
-            val m = Dbscan.run(pts(s, dir), "id", "qi", e, minPts, kAnon, Cc,
-              pairsOpt = Some(sharedPairs(s, dir).where(col("d") < e)))
-            built += m
-            m
-          })
-      finally built.foreach(_.unpersist())
-      recs.map(r => (r.eps, r.nClusters, r.nNoise,
-        BigDecimal(r.clusterError).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        if (r.noiseError.isPosInfinity) -1.0
-        else BigDecimal(r.noiseError).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble))
-        .toDF("eps", "n_clusters", "n_noise", "cluster_error", "noise_error")
+      def round2(x: Double) =
+        BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val small = Dbscan.run(pts(s, dir), "id", "qi", 0.5, minPts, kAnon, Cc,
+        pairsOpt = Some(sharedPairs(s, dir).where(col("d") < 0.5)))
+      val legs = try Seq(0.5 -> small, eps -> sharedModel(s, dir))
+          .map { case (e, m) => (e, m.nClusters, m.nNoise,
+            round2(m.clusterError),
+            if (m.noiseError.isPosInfinity) -1.0 else round2(m.noiseError)) }
+        finally small.unpersist()
+      legs.toDF("eps", "n_clusters", "n_noise", "cluster_error", "noise_error")
         .orderBy("eps")
     }),
 

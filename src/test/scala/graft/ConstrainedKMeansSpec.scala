@@ -1,6 +1,8 @@
 package graft
 
+import graft.functions.Distances
 import graft.kmeans.ConstrainedKMeans
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class ConstrainedKMeansSpec extends GraftSuite {
@@ -86,6 +88,21 @@ class ConstrainedKMeansSpec extends GraftSuite {
       s"cached blocks leaked across the fit: before=$before after=${sc.getPersistentRDDs.size}")
   }
 
+  /** The round-1 literal-fold nearest centroid: the declarative oracle of
+    * the native kernel (ties keep the lowest cluster index). */
+  private def nearestCentroidFold(qi: Column,
+                                  cents: Seq[(Int, Array[Double])]): Column = {
+    val centArr = array(cents.sortBy(_._1).map { case (cid, c) =>
+      struct(lit(cid).as("cluster"), array(c.map(lit(_)): _*).as("centroid"))
+    }: _*)
+    val init = struct(lit(-1).as("cluster"), lit(Double.PositiveInfinity).as("d"))
+    aggregate(centArr, init, (acc, ctr) => {
+      val d = Distances.l1(qi, ctr.getField("centroid"))
+      when(d < acc.getField("d"),
+        struct(ctr.getField("cluster").as("cluster"), d.as("d"))).otherwise(acc)
+    })
+  }
+
   test("native nearest-centroid kernel is bit-equal to the literal fold") {
     val rnd = new scala.util.Random(17)
     val pts = (0 until 200).map(i =>
@@ -94,7 +111,7 @@ class ConstrainedKMeansSpec extends GraftSuite {
     val mismatches = pts.select(
       element_at(graft.functions.VecKernels.nearest_centroids(
         col("qi"), cents, 1, cosine = false), 1).as("k"),
-      ConstrainedKMeans.nearestCentroidFold(col("qi"), cents).as("f"))
+      nearestCentroidFold(col("qi"), cents).as("f"))
       .where(col("k.cluster") =!= col("f.cluster") || col("k.d") =!= col("f.d"))
       .count()
     assert(mismatches == 0)

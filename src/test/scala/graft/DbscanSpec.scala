@@ -1,6 +1,8 @@
 package graft
 
+import graft.core.QueryCache
 import graft.dbscan.{Cc, ClusterMode, Dbscan, DbscanModel, Scc}
+import graft.queries.ClusterQueries
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -130,7 +132,6 @@ class DbscanSpec extends GraftSuite {
     def numbers(m: DbscanModel) =
       (m.nClusters, m.nNoise, m.clusterError, m.noiseError)
     for ((pts, label, mode, minPts, k, bd, epsRange) <- inputs) {
-      val n = pts.count()
       val (recs, best) = Dbscan.sweep(pts, "id", "qi", epsRange, minPts, k,
         mode, blockDims = bd)
       val (bestEps, won) = best.getOrElse(fail(s"$label $mode: no winner"))
@@ -145,12 +146,9 @@ class DbscanSpec extends GraftSuite {
           val m = Dbscan.run(pts, "id", "qi", eps, minPts, k, mode,
             blockDims = bd)
           try {
-            val fresh =
-              if (m.nClusters == 0 && m.nNoise == n && m.clusterError == 0.0)
-                (0L, n, 0.0, Double.PositiveInfinity)
-              else numbers(m)
+            // a clusterless run itself reports noiseError = ∞
             assert((rec.nClusters, rec.nNoise, rec.clusterError,
-              rec.noiseError) == fresh,
+              rec.noiseError) == numbers(m),
               s"$label $mode eps=$eps: sliced sweep != fresh run")
             if (eps == bestEps) {
               assert(assignmentRows(won) == assignmentRows(m),
@@ -200,25 +198,31 @@ class DbscanSpec extends GraftSuite {
       "a sweep with no winner stranded a cache")
   }
 
-  test("runner-served models stay persisted: the sweep never unpersists them") {
-    // models the caller owns (e.g. a cache entry) must survive the sweep
-    // whether they win, lose to an earlier radius, or are displaced as best
-    def model(i: Long, err: Double) = graft.dbscan.DbscanModel(
-      Seq(i).toDF("id").persist(), Seq(i + 100L).toDF("component").persist(),
-      nClusters = 1, nNoise = 0, clusterError = err, noiseError = 0.0)
-    val models = Map(1.0 -> model(1L, 5.0), 2.0 -> model(2L, 3.0),
-      3.0 -> model(3L, 4.0))
-    try {
-      val (_, best) = Dbscan.sweep(twoBlobs, "id", "qi",
-        epsRange = Seq(1.0, 2.0, 3.0), minPts = 3, k = 3, runner = models)
-      assert(best.map(_._1).contains(2.0))
-      for ((eps, m) <- models) {
-        assert(m.assignments.storageLevel != StorageLevel.NONE,
-          s"eps=$eps assignments were unpersisted by the sweep")
-        assert(m.centroids.storageLevel != StorageLevel.NONE,
-          s"eps=$eps centroids were unpersisted by the sweep")
-      }
-    } finally models.values.foreach(_.unpersist())
+  test("dbscan_sweep gate: repeated calls neither strand the ε=0.5 model " +
+      "nor unpersist the shared ε=2.0 model") {
+    // the gate owns its legs' caches: the ε=0.5 model it builds is released
+    // once read; the ε=2.0 model is the shared cache entry and stays
+    val sc = spark.sparkContext
+    val gate = SparkEntry.queries("dbscan_sweep")
+    // fresh entries, so the caches the gate holds are the ones it built
+    Seq(ClusterQueries.ModelKey, ClusterQueries.PairsKey)
+      .foreach(QueryCache.evict(_, spark, sf0001))
+    val before = sc.getPersistentRDDs.keySet
+    val rows = gate(spark, sf0001).collect().toSeq
+    assert(gate(spark, sf0001).collect().toSeq == rows)
+    val second = sc.getPersistentRDDs.keySet
+    val held = second -- before
+    assert(gate(spark, sf0001).collect().toSeq == rows)
+    val third = sc.getPersistentRDDs.keySet
+    assert(third -- second == Set.empty,
+      s"a repeated call stranded a cache: ${third -- second}")
+    assert(held.nonEmpty && held.subsetOf(third),
+      s"a repeated call unpersisted a shared cache: ${held -- third}")
+    val shared = QueryCache.shared(ClusterQueries.ModelKey, spark, sf0001)(
+      fail("the gate must leave the shared ε=2.0 model cached"): DbscanModel)
+    assert(shared.assignments.storageLevel != StorageLevel.NONE &&
+      shared.centroids.storageLevel != StorageLevel.NONE,
+      "the shared ε=2.0 model was unpersisted")
   }
 
   test("weighted sweep over collapsed rows equals sweep over duplicates") {
@@ -269,8 +273,7 @@ class DbscanSpec extends GraftSuite {
 
   test("sweep on empty input returns zero records, no exception") {
     val empty = Seq.empty[(Long, Array[Double])].toDF("id", "qi")
-    // batched CC path (runner == null): the empty guard must fire before
-    // any head() on the empty points
+    // the empty guard must fire before any head() on the empty points
     val (recs, best) = Dbscan.sweep(empty, "id", "qi",
       epsRange = Seq(1.0, 2.0), minPts = 2, k = 2)
     assert(best.isEmpty, "no model to build from empty input")

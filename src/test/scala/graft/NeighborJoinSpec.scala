@@ -18,7 +18,7 @@ class NeighborJoinSpec extends GraftSuite {
     val eps = 8.0
     val grid = NeighborJoin.epsJoinGrid(df, "id", "pt", eps)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    val cross = NeighborJoin.epsJoinCross(df, "id", "pt", eps)
+    val cross = EpsJoinOracle.epsJoinCross(df, "pt", eps)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(grid == cross)
     assert(grid.nonEmpty)
@@ -31,7 +31,7 @@ class NeighborJoinSpec extends GraftSuite {
     val eps = 40.0
     val grid = NeighborJoin.epsJoinGrid(df, "id", "pt", eps, blockDims = 3)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    val cross = NeighborJoin.epsJoinCross(df, "id", "pt", eps)
+    val cross = EpsJoinOracle.epsJoinCross(df, "pt", eps)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(grid == cross)
   }

@@ -30,7 +30,7 @@ class PropertySpec extends GraftSuite {
         .toDF("id", "pt")
       val grid = NeighborJoin.epsJoinGrid(df, "id", "pt", eps, blockDims = dims.min(2))
         .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-      val cross = NeighborJoin.epsJoinCross(df, "id", "pt", eps)
+      val cross = EpsJoinOracle.epsJoinCross(df, "pt", eps)
         .select("a_id", "b_id").as[(Long, Long)].collect().toSet
       assert(grid == cross, s"n=$n dims=$dims seed=$seed eps=$eps")
     }
