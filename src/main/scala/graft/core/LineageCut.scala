@@ -49,10 +49,18 @@ object LineageCut {
     * call once everything that reads `out` is materialized, and only for
     * steps whose own RDD leaves are all `localCheckpoint()`s. */
   def releaseAdded(out: Dataset[_], in: Dataset[_]): Unit = {
-    def leaves(df: Dataset[_]) = df.queryExecution.analyzed.collectLeaves()
-      .collect { case r: LogicalRDD => r.rdd }
     val inIds = leaves(in).map(_.id).toSet
     leaves(out).filterNot(r => inIds(r.id))
       .foreach(_.unpersist(blocking = false))
   }
+
+  /** Eagerly free every RDD leaf of `df`'s plan: [[release]] for a Dataset
+    * derived (e.g. projected) from checkpoints that its owner alone holds.
+    * Same caveat as [[backingRdd]]. */
+  def releaseAll(df: Dataset[_]): Unit =
+    leaves(df).foreach(_.unpersist(blocking = false))
+
+  private def leaves(df: Dataset[_]): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collectLeaves()
+      .collect { case r: LogicalRDD => r.rdd }
 }

@@ -9,15 +9,18 @@ import org.apache.spark.storage.StorageLevel
 /** One fitted constrained-k-means model. `assignment` is (cluster, id, qi);
   * `centroids` are the post-fit per-cluster means; `cost` is the total L1
   * distance of members to their (new) centroids — the reference computes
-  * cost against the NEW centroids (k-means.ipynb cost step).
+  * cost against the NEW centroids (k-means.ipynb cost step). An
+  * unrepaired iteration's cost is summed in the NEXT iteration's pass
+  * (see [[ConstrainedKMeans.fit]]).
   */
 final case class KMeansModel(assignment: DataFrame,
                              centroids: Map[Int, Array[Double]],
                              cost: Double, lloydIters: Int)
     extends graft.core.QueryCache.Releasable {
-  // `assignment` is localCheckpoint'd — Dataset.unpersist can't see its
-  // cache, so drop the backing RDD's blocks directly.
-  def unpersist(): Unit = graft.core.LineageCut.release(assignment)
+  // `assignment` is a localCheckpoint, or a projection of one that the
+  // model alone holds — Dataset.unpersist can't see either's cache, so
+  // drop the backing RDD's blocks directly.
+  def unpersist(): Unit = graft.core.LineageCut.releaseAll(assignment)
   override def release(): Unit = unpersist()
 }
 
@@ -49,37 +52,92 @@ object ConstrainedKMeans {
     * `aggregate` fold — ConstrainedKMeansSpec's cross-check — hits the
     * JVM 64KB codegen limit past a few hundred centroids). Ties keep the
     * lowest cluster index. */
-  private def nearestCentroid(qi: Column, cents: Seq[(Int, Array[Double])]): Column =
+  private[graft] def nearestCentroid(qi: Column,
+                                     cents: Seq[(Int, Array[Double])]): Column =
     element_at(
       graft.functions.VecKernels.nearest_centroids(qi, cents, 1, cosine = false), 1)
 
   /** The centroid of each row's `cluster`, as an `array<double>` column:
     * a lookup in a literal cluster → centroid map. */
-  private def centroidOf(centroids: Map[Int, Array[Double]],
-                         cluster: Column): Column =
+  private[graft] def centroidOf(centroids: Map[Int, Array[Double]],
+                                cluster: Column): Column =
     element_at(map(centroids.toSeq.sortBy(_._1).flatMap { case (cid, c) =>
       Seq(lit(cid), array(c.map(lit(_)): _*))
     }: _*), cluster)
 
-  /** One (nClusters, init) fit: Lloyd loop with k-member repair. */
+  /** One (nClusters, init) fit: Lloyd loop with k-member repair.
+    *
+    * An iteration whose first round needs no repair costs ONE Spark
+    * aggregate: a `groupBy("cluster")` collect over the round's lazily
+    * checkpointed assignment returns every cluster's size (the repair
+    * test), per-dimension qi sums (the new centroids, `sum / count`) and
+    * the previous iteration's cost, and it materializes the checkpoint,
+    * which becomes the iteration's assignment. Only iterations that
+    * donate points run a second aggregate, the per-cluster `avg` over
+    * their checkpointed union of rounds.
+    *
+    * Cost is deferred by one iteration: after an unrepaired iteration i,
+    * iteration i+1's first round reads assignment(i) — every point, in the
+    * points' own row order — with each point's L1 distance to its own new
+    * centroid, and sums it per cluster in that same aggregate (the sums
+    * are added in sorted cluster order). Model i is settled once its cost
+    * is known — strict `<`, so the earlier iteration wins ties — and the
+    * losing model's assignment is released at once. A repaired
+    * iteration's cost, and the last iteration's, take one more pass of
+    * the same shape, and the iteration after a repaired one reads the
+    * points afresh, so centroids and assignments match the per-iteration
+    * three-action loop bit for bit. */
   def fit(points: DataFrame, idCol: String, qiCol: String, nClusters: Int,
           kAnon: Int, seed: Long, maxLloyd: Int = 20, maxRepair: Int = 100)
   : KMeansModel = {
     val pts = points.select(col(idCol).cast("long").as("id"), col(qiCol).as("qi"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    try fitOn(pts, nClusters, kAnon, seed, maxLloyd, maxRepair)
+    try fitOn(pts, dimOf(pts), nClusters, kAnon, seed, maxLloyd, maxRepair)
     finally pts.unpersist()
   }
 
-  /** [[fit]] over an already-projected, caller-persisted (id, qi) frame —
-    * the seam [[sweep]] shares ONE cached point set through (Spark's
-    * CacheManager keys persists by logical plan, so per-fit persists of
-    * the same projection would thrash each other's cache under the
-    * concurrent sweep). */
-  private def fitOn(pts: DataFrame, nClusters: Int, kAnon: Int, seed: Long,
-                    maxLloyd: Int, maxRepair: Int): KMeansModel = {
-    val dim = pts.select(size(col("qi"))).head().getInt(0)
+  private def dimOf(pts: DataFrame): Int =
+    pts.select(size(col("qi"))).head().getInt(0)
 
+  /** A round's assignment: every available point's nearest available
+    * centroid (`cluster`, at L1 distance `d`), carrying (id, qi, cost). */
+  private def assign(avail: DataFrame,
+                     cents: Map[Int, Array[Double]]): DataFrame =
+    avail.withColumn("nc", nearestCentroid(col("qi"), cents.toSeq))
+      .select(col("id"), col("qi"), col("cost"),
+        col("nc.cluster").as("cluster"), col("nc.d").as("d"))
+
+  /** An iteration's assignment as the next first round's input: (id, qi)
+    * and `cost`, the point's L1 distance to its own cluster's centroid. */
+  private def withCost(assignment: DataFrame,
+                       centroids: Map[Int, Array[Double]]): DataFrame =
+    assignment.select(col("id"), col("qi"),
+      Distances.l1(col("qi"), centroidOf(centroids, col("cluster"))).as("cost"))
+
+  /** Per cluster of a round's assignment: size, per-dimension qi sums and
+    * the `cost` sum — one `groupBy("cluster")` collect. */
+  private def clusterStats(assigned: DataFrame, dim: Int)
+  : Map[Int, (Long, Array[Double], Double)] = {
+    val sums = (0 until dim).map(i => sum(element_at(col("qi"), i + 1))) :+
+      sum(col("cost"))
+    assigned.groupBy("cluster").agg(count(lit(1)), sums: _*).collect()
+      .map(r => r.getInt(0) -> ((r.getLong(1),
+        Array.tabulate(dim)(i => r.getDouble(i + 2)), r.getDouble(dim + 2))))
+      .toMap
+  }
+
+  /** The cost summed over [[clusterStats]] in sorted cluster order, so the
+    * total never depends on the order the groups were collected in. */
+  private def totalCost(stats: Map[Int, (Long, Array[Double], Double)]): Double =
+    stats.toSeq.sortBy(_._1).foldLeft(0.0)(_ + _._2._3)
+
+  /** [[fit]] over an already-projected, caller-persisted (id, qi) frame of
+    * `dim`-long qi vectors — the seam [[sweep]] shares ONE cached point set
+    * through (Spark's CacheManager keys persists by logical plan, so
+    * per-fit persists of the same projection would thrash each other's
+    * cache under the concurrent sweep). */
+  private def fitOn(pts: DataFrame, dim: Int, nClusters: Int, kAnon: Int,
+                    seed: Long, maxLloyd: Int, maxRepair: Int): KMeansModel = {
     // Random initial centroids = a seeded sample of the points
     // (rdd.takeSample(False, want_cluster), k-means.ipynb; we add the seed
     // the reference lacked, SURVEY §2.10 C5).
@@ -88,7 +146,18 @@ object ConstrainedKMeans {
         .takeSample(withReplacement = false, nClusters, seed)
         .zipWithIndex.map { case (c, i) => i -> c }.toMap
 
-    var model: KMeansModel = null
+    var best: KMeansModel = null
+    def settle(m: KMeansModel): Unit =
+      if (best == null || m.cost < best.cost) {
+        if (best != null) best.unpersist()
+        best = m
+      } else m.unpersist()
+    // a model's cost in its own pass, grouped like a next first round
+    def settleNow(m: KMeansModel): Unit = settle(m.copy(cost = totalCost(
+      clusterStats(assign(withCost(m.assignment, m.centroids), m.centroids), dim))))
+
+    // the previous iteration's model, until its cost is known
+    var pending: KMeansModel = null
     var iters = 0
     var done = false
     while (!done && iters < maxLloyd) {
@@ -96,34 +165,36 @@ object ConstrainedKMeans {
 
       // ---- repair loop: every cluster ends with >= k members (modulo the
       // tolerated single deficit) ----
-      // Each round's assignment is persisted (it feeds the size count, the
-      // keep-k split, and the final union); rounds' caches are RELEASED as
-      // soon as the iteration's final assignment is materialized, and the
-      // accumulating `completed` union is lineage-cut every few rounds —
-      // without both, a long repair run leaks cached blocks and grows the
-      // plan a layer per round.
-      var avail = pts
+      // Each round's assignment is a LAZY checkpoint: the round's
+      // aggregate materializes it, and the keep-k split and the final
+      // union read it. A repairing iteration releases its rounds'
+      // checkpoints once its own assignment is materialized, and cuts the
+      // accumulating `completed` union every few rounds — without both, a
+      // long repair run leaks cached blocks and grows the plan a layer per
+      // round.
+      var avail =
+        if (pending == null) pts.withColumn("cost", lit(0.0))
+        else withCost(pending.assignment, centroids)
       var availCents = centroids
       var completed: DataFrame = null
-      var roundCaches = List.empty[DataFrame]
+      var roundCks = List.empty[DataFrame]
+      var unrepaired: Map[Int, (Long, Array[Double], Double)] = null
       var repairs = 0
       var repairing = true
       while (repairing && repairs < maxRepair) {
         repairs += 1
-        val assigned = avail.withColumn("nc",
-          nearestCentroid(col("qi"), availCents.toSeq))
-          .select(col("id"), col("qi"),
-            col("nc.cluster").as("cluster"), col("nc.d").as("d"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        roundCaches ::= assigned
-
-        val sizesMap = assigned.groupBy("cluster").agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+        val assigned = assign(avail, availCents).localCheckpoint(eager = false)
+        roundCks ::= assigned
+        val stats = clusterStats(assigned, dim)
+        if (pending != null) {
+          // the first round read assignment(i-1) with its costs
+          settle(pending.copy(cost = totalCost(stats)))
+          pending = null
+        }
         // seeded-empty clusters (sc.parallelize union) = available clusters
         // with zero assigned rows
-        val allSizes = availCents.keysIterator
-          .map(c => c -> sizesMap.getOrElse(c, 0L)).toMap
-        val deficient = allSizes.filter(_._2 < kAnon).keySet
+        val deficient = availCents.keySet
+          .filter(c => stats.get(c).fold(0L)(_._1) < kAnon)
 
         if (deficient.size > 1) {
           // keep the k nearest of every cluster (deficient ones keep all)
@@ -133,54 +204,55 @@ object ConstrainedKMeans {
           completed = if (completed == null) kept else completed.unionByName(kept)
           if (repairs % 8 == 0) {
             completed = completed.localCheckpoint()
-            roundCaches ::= completed
+            roundCks ::= completed
           }
-          avail = ranked.where(col("rn") > kAnon).select("id", "qi")
+          avail = ranked.where(col("rn") > kAnon).select("id", "qi", "cost")
           availCents = availCents.view.filterKeys(deficient).toMap
         } else {
           val fin = assigned.select("cluster", "id", "qi")
+          if (completed == null) unrepaired = stats
           completed = if (completed == null) fin
             else completed.unionByName(fin)
           repairing = false
         }
       }
 
-      // lineage cut: the checkpoint is LAZY — the centroid aggregation
-      // right below is the action that materializes it, so the iteration
-      // schedules one job for both instead of two
-      val assignment = completed.localCheckpoint(eager = false)
-
-      // new centroid = per-dimension mean over members (calculate_centroid)
-      val dimAvgs = (0 until dim).map(i => avg(element_at(col("qi"), i + 1)).as(s"c$i"))
-      val newCentroids = assignment.groupBy("cluster")
-        .agg(dimAvgs.head, dimAvgs.tail: _*)
-        .collect()
-        .map(r => r.getInt(0) -> (0 until dim).map(i => r.getDouble(i + 1)).toArray)
-        .toMap
-
-      // the agg materialized the checkpoint, so the per-round caches are
-      // dead (roundCaches mixes persist()'d assignments, which unpersist()
-      // handles, and intermediate checkpoints, which need the RDD release)
-      roundCaches.foreach { df =>
-        df.unpersist()
-        graft.core.LineageCut.release(df)
-      }
-
-      // cost vs NEW centroids (distance to the OWN cluster's centroid, not
-      // the nearest one), in one declarative pass over a literal map
-      val cost = assignment
-        .select(sum(Distances.l1(col("qi"), centroidOf(newCentroids, col("cluster")))))
-        .head().getDouble(0)
-
-      if (model == null || cost < model.cost) {
-        if (model != null) model.unpersist()
-        model = KMeansModel(assignment, newCentroids, cost, iters)
-      } else graft.core.LineageCut.release(assignment)
+      val newCentroids =
+        if (unrepaired != null) {
+          // the first round needed no repair: its checkpoint is the
+          // assignment and its sums give the new centroids (sum / count is
+          // Spark's avg, bit for bit, over the same rows); the next
+          // iteration's first round reads it and yields its cost
+          val cents = unrepaired.map { case (c, (n, s, _)) => c -> s.map(_ / n) }
+          pending = KMeansModel(completed, cents, Double.NaN, iters)
+          cents
+        } else {
+          // lineage cut: LAZY, materialized by the aggregation below
+          val ck = completed.localCheckpoint(eager = false)
+          // new centroid = per-dimension mean over members (calculate_centroid)
+          val dimAvgs = (0 until dim).map(i =>
+            avg(element_at(col("qi"), i + 1)).as(s"c$i"))
+          val cents = ck.groupBy("cluster")
+            .agg(dimAvgs.head, dimAvgs.tail: _*)
+            .collect()
+            .map(r => r.getInt(0) -> (0 until dim).map(i => r.getDouble(i + 1)).toArray)
+            .toMap
+          roundCks.foreach(graft.core.LineageCut.release)
+          // a union of rounds is no input for the next iteration: its row
+          // order would change the next centroid sums' rounding, and a
+          // repair that maxRepair cut short lacks the points left in the
+          // pool — so the next iteration reads `pts`, and this cost takes
+          // its own pass
+          settleNow(KMeansModel(ck, cents, Double.NaN, iters))
+          cents
+        }
 
       done = isConverged(centroids, newCentroids, dim)
       centroids = newCentroids
     }
-    model.copy(lloydIters = iters)
+    // the last iteration's cost takes one more pass
+    if (pending != null) settleNow(pending)
+    best.copy(lloydIters = iters)
   }
 
   /** Signed-drift convergence (k-means.ipynb is_converge — the shipped
@@ -225,11 +297,12 @@ object ConstrainedKMeans {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     val models: Seq[KMeansModel] =
       try {
+        val dim = dimOf(pts) // once for every fit
         implicit val ec: scala.concurrent.ExecutionContext =
           scala.concurrent.ExecutionContext.fromExecutor(pool)
         val futs = combos.map { case (c, r) =>
           scala.concurrent.Future {
-            fitOn(pts, c, kAnon, seed + c * 1000 + r, maxLloyd,
+            fitOn(pts, dim, c, kAnon, seed + c * 1000 + r, maxLloyd,
               maxRepair = 100)
           }
         }
