@@ -55,28 +55,6 @@ final case class SweepRecord(eps: Double, nClusters: Long, nNoise: Long,
   */
 object Dbscan {
 
-  /** Element budget for the driver-collected centroid matrix behind the
-    * pruned assign (the matrix rides the plan as one reference object).
-    * The bound is on CENTROIDS × DIM, not centroid count alone — the
-    * collect and the per-stage reference object scale with both, so a
-    * count-only cap would let a high-dim fit (e.g. 128-dim embeddings)
-    * ship a multi-GB matrix. 2^23 doubles is 64 MB flat: at dim 8 that
-    * is the old 2^20-centroid ceiling exactly. Above budget the noise
-    * assign switches to [[graft.operators.CentroidJoin.assignExact]] —
-    * the collect-free coarse-bucket probe join: the centroid table stays
-    * distributed, only its O(√k·dim) coarse summary rides the plan, and
-    * per-row work is probe-bounded instead of the old broadcast
-    * crossJoin's rows × k candidate shuffle. Same min-struct semantics
-    * at any k. */
-  private[graft] val MaxAssignElements: Long = 1L << 23
-  /** Spec hook: lowers the element budget so the join-based regime
-    * engages at test scale ([[MaxAssignElements]] otherwise). */
-  private[graft] var assignElementBudget: Long = MaxAssignElements
-  /** The element budget expressed as a centroid-count ceiling at a
-    * given dimensionality. */
-  private[graft] def maxAssignCentroids(dim: Int): Long =
-    assignElementBudget / math.max(1, dim)
-
   /** Adds (`ccName`, `dName`) = (nearest centroid's component id, its L1
     * distance) via the triangle-inequality-pruned exact argmin
     * ([[graft.functions.VecKernels.pruned_nearest]]) — one narrow
@@ -84,9 +62,8 @@ object Dbscan {
     * one reference object, so the plan stays O(1) in k; per-row cost is
     * O(√k·dim) expected. Ties go to the lowest component id (the
     * min-struct tiebreak). The noise assign of [[cluster]] and of the ML
-    * transform up to the [[MaxAssignElements]] budget. `sorted` MUST be
-    * ascending by component id. A null vector yields null in both
-    * columns. */
+    * transform. `sorted` MUST be ascending by component id. A null vector
+    * yields null in both columns. */
   private[graft] def withPrunedNearest(df: DataFrame, qiCol: String,
                                 sorted: IndexedSeq[(Long, Array[Double])],
                                 ccName: String, dName: String): DataFrame =
@@ -156,9 +133,9 @@ object Dbscan {
     * each step written once for [[run]] (one block) and [[sweep]] (every
     * radius in one pass, the winner published from it): weighted core
     * rule, core → neighbour edges, components, k-anonymity, centroids,
-    * per-block stats in one action, and the noise → nearest-centroid
-    * assign. `pts` is (id, qi) with unique ids. Records carry
-    * `seconds = 0`.
+    * the noise → nearest-centroid assign, and per-block stats from one
+    * centroid collect plus one action. `pts` is (id, qi) with unique
+    * ids. Records carry `seconds = 0`.
     */
   private def cluster(pts: DataFrame, tagged: DataFrame, blocks: Blocks,
                       minPts: Int, k: Int, mode: ClusterMode): Clustered = {
@@ -207,75 +184,56 @@ object Dbscan {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     try {
-      val members = labeled.where(col("component").isNotNull)
-      val noise = labeled.where(col("component").isNull)
-      // per-block cluster count, member error and noise count in ONE
-      // action (round 16, guide §2.6): the three aggregates are tagged and
-      // unioned so their stages run concurrently inside one job instead
-      // of three driver round-trips. Long metrics ride a long column, the
-      // error a double column — no lossy cast. The member error keeps the
-      // inner component-keyed join (no null-keyed noise rows ever enter a
-      // join — a component=null hot key would hash to one task at scale).
-      val stats = centroids.groupBy(blocks.of("component").as("ei"))
-        .agg(count(lit(1)).as("vl"))
-        .select(col("ei"), lit("k").as("m"), col("vl"), lit(0.0).as("vd"))
-        .unionByName(members.join(centroids, "component")
-          .groupBy(blocks.of("component").as("ei"))
-          .agg(sum(Distances.l1(col("qi"), col("centroid"))).as("vd"))
-          .select(col("ei"), lit("ce").as("m"), lit(0L).as("vl"), col("vd")))
-        .unionByName(noise.groupBy(blocks.of("id").as("ei"))
-          .agg(count(lit(1)).as("vl"))
-          .select(col("ei"), lit("nn").as("m"), col("vl"), lit(0.0).as("vd")))
-        .collect().map(r => (r.getString(1), r.getInt(0)) -> r).toMap
+      // Noise → nearest same-block centroid, L1, ties to the lowest
+      // component id (assign_nearest, DBSCAN.py:126-133): the pruned-exact
+      // kernel over each block's collected centroid matrix, one pass over
+      // the noise rows instead of a crossJoin that shuffles
+      // |noise|·|clusters| candidate rows through a group-min. A
+      // k-anonymous clustering has at most n/k centroids, so the table
+      // collects like the reference's broadcast list (DBSCAN.py:188); a
+      // block's row count is its cluster count. Components ascend per
+      // block — the kernel's documented precondition (collect order is
+      // arbitrary).
+      val byBlock = centroids
+        .select(blocks.of("component"), col("component"), col("centroid"))
+        .collect().groupBy(_.getInt(0))
+        .map { case (ei, rows) =>
+          ei -> rows.map(r => (r.getLong(1), r.getSeq[Double](2).toArray))
+            .sortBy(_._1).toIndexedSeq
+        }
       val nClusters = blocks.eps.indices.map(ei =>
-        stats.get(("k", ei)).fold(0L)(_.getLong(2)))
+        byBlock.get(ei).fold(0L)(_.size.toLong))
+      val noise = labeled.where(col("component").isNull)
+      val nearest = blocks.eps.indices.map { ei =>
+        val noiseIn = noise.where(blocks.of("id") === ei)
+          .select(col("id"), col("qi"))
+        byBlock.get(ei) match {
+          case Some(cents) =>
+            withPrunedNearest(noiseIn, "qi", cents, "cc", "an_err")
+          case None => noiseIn.select(col("id"), col("qi"),
+            lit(null).cast("long").as("cc"),
+            lit(null).cast("double").as("an_err"))
+        }
+      }
+
+      // per-block member error, noise count and noise error in ONE action:
+      // the two aggregates are tagged and unioned so their stages run
+      // inside one job. The member error keeps the inner component-keyed
+      // join (no null-keyed noise rows ever enter a join — a
+      // component=null hot key would hash to one task at scale); the noise
+      // numbers are read off the very `nearest` rows the model publishes.
+      val stats = labeled.where(col("component").isNotNull)
+        .join(centroids, "component")
+        .groupBy(blocks.of("component").as("ei"))
+        .agg(sum(Distances.l1(col("qi"), col("centroid"))).as("vd"))
+        .select(col("ei"), lit("ce").as("m"), lit(0L).as("vl"), col("vd"))
+        .unionByName(nearest.reduce(_ unionByName _)
+          .groupBy(blocks.of("id").as("ei"))
+          .agg(count(lit(1)).as("vl"), sum("an_err").as("vd"))
+          .select(col("ei"), lit("nn").as("m"), col("vl"), col("vd")))
+        .collect().map(r => (r.getString(1), r.getInt(0)) -> r).toMap
       val nNoise = blocks.eps.indices.map(ei =>
         stats.get(("nn", ei)).fold(0L)(_.getLong(2)))
-      val clustered = blocks.eps.indices.filter(nClusters(_) > 0)
-      val totalClusters = nClusters.sum
-
-      // Noise → nearest same-block centroid, L1, ties to the lowest
-      // component id (assign_nearest, DBSCAN.py:126-133). Up to the
-      // [[MaxAssignElements]] budget the argmin is the pruned-exact
-      // kernel — one pass over the noise rows with the centroid matrix as
-      // a reference object, instead of a crossJoin that shuffles
-      // |noise|·|clusters| candidate rows through a group-min; beyond it
-      // nothing may collect or broadcast, and the coarse-bucket probe
-      // join keeps the centroid table distributed (per-block jobs, never
-      // a rows × k candidate shuffle). Each block has its own centroid
-      // set and its own frame.
-      def noiseIn(ei: Int) =
-        noise.where(blocks.of("id") === ei).select(col("id"), col("qi"))
-      val assigned: Map[Int, DataFrame] =
-        if (totalClusters == 0) Map.empty
-        else if (totalClusters <= maxAssignCentroids(dim)) {
-          // ascending component ids per block — the kernel's documented
-          // precondition (collect order is arbitrary)
-          val byBlock = centroids
-            .select(blocks.of("component"), col("component"), col("centroid"))
-            .collect().groupBy(_.getInt(0))
-            .map { case (ei, rows) =>
-              ei -> rows.map(r => (r.getLong(1), r.getSeq[Double](2).toArray))
-                .sortBy(_._1).toIndexedSeq
-            }
-          clustered.map(ei => ei -> withPrunedNearest(noiseIn(ei), "qi",
-            byBlock(ei), "cc", "an_err")).toMap
-        } else clustered.map(ei => ei ->
-          graft.operators.CentroidJoin.assignExact(noiseIn(ei), "id", "qi",
-              centroids.where(blocks.of("component") === ei)
-                .select(col("component"), col("centroid")),
-              "component", "centroid", "cc", "__cent", "an_err")
-            .drop("__cent")).toMap
-
-      val noiseError =
-        if (!clustered.exists(nNoise(_) > 0)) Map.empty[Int, Double]
-        else clustered.map(assigned).reduce(_ unionByName _)
-          .groupBy(blocks.of("id")).agg(sum("an_err"))
-          .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      val nearest = blocks.eps.indices.map(ei => assigned.getOrElse(ei,
-        noiseIn(ei).select(col("id"), col("qi"),
-          lit(null).cast("long").as("cc"),
-          lit(null).cast("double").as("an_err"))))
 
       // a clusterless block is the reference's [eps, 0, n, 0, ∞, ∞]
       // empty record (DBSCAN.py:163-167); all its points are noise
@@ -284,7 +242,7 @@ object Dbscan {
         val ne =
           if (nNoise(ei) == 0) 0.0
           else if (nClusters(ei) == 0) Double.PositiveInfinity
-          else noiseError(ei)
+          else stats(("nn", ei)).getDouble(3)
         SweepRecord(blocks.eps(ei), nClusters(ei), nNoise(ei), ce, ne,
           ce + ne, 0.0)
       }

@@ -210,11 +210,11 @@ object VecKernels {
     * [[nearest_centroids]] kernel (same per-member summation order, so
     * distances are bit-equal), but probe-bounded per row via
     * triangle-inequality pruning over coarse groups
-    * ([[PrunedCentroidIndex]]). This is the >8k-cluster assign regime:
-    * the exhaustive kernel's O(k) per-row scan (and the old broadcast
-    * crossJoin fallback's rows x k candidate shuffle) stop scaling right
-    * where a 100 TB DBSCAN's component count lives. `sorted` must be
-    * ascending by component id. */
+    * ([[PrunedCentroidIndex]]). The DBSCAN noise assign and the ML
+    * transform at every cluster count: the exhaustive kernel's O(k)
+    * per-row scan (and a broadcast crossJoin's rows x k candidate
+    * shuffle) grow with the component count, this does not. `sorted`
+    * must be ascending by component id. */
   def pruned_nearest(vec: Column,
                      sorted: IndexedSeq[(Long, Array[Double])]): Column = {
     require(sorted.nonEmpty, "pruned_nearest: empty centroid set")

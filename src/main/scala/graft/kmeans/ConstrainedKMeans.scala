@@ -41,7 +41,9 @@ final case class KMeansModel(assignment: DataFrame,
   *
   * Deviation: the reference's repair loop can livelock when the donation
   * pool dries up while ≥2 clusters are deficient (it would spin forever);
-  * we stop after `maxRepair` rounds and keep the partial assignment.
+  * the `maxRepair`-th round ends the repair with its whole assignment, so
+  * every point still in the pool takes its nearest available centroid
+  * and no input point drops out of the model.
   */
 object ConstrainedKMeans {
 
@@ -164,7 +166,8 @@ object ConstrainedKMeans {
       iters += 1
 
       // ---- repair loop: every cluster ends with >= k members (modulo the
-      // tolerated single deficit) ----
+      // tolerated single deficit), or the `maxRepair`-th round assigns the
+      // whole pool ----
       // Each round's assignment is a LAZY checkpoint: the round's
       // aggregate materializes it, and the keep-k split and the final
       // union read it. A repairing iteration releases its rounds'
@@ -181,7 +184,7 @@ object ConstrainedKMeans {
       var unrepaired: Map[Int, (Long, Array[Double], Double)] = null
       var repairs = 0
       var repairing = true
-      while (repairing && repairs < maxRepair) {
+      while (repairing) {
         repairs += 1
         val assigned = assign(avail, availCents).localCheckpoint(eager = false)
         roundCks ::= assigned
@@ -196,7 +199,7 @@ object ConstrainedKMeans {
         val deficient = availCents.keySet
           .filter(c => stats.get(c).fold(0L)(_._1) < kAnon)
 
-        if (deficient.size > 1) {
+        if (deficient.size > 1 && repairs < maxRepair) {
           // keep the k nearest of every cluster (deficient ones keep all)
           val w = Window.partitionBy("cluster").orderBy(col("d"), col("id"))
           val ranked = assigned.withColumn("rn", row_number().over(w))
@@ -239,10 +242,8 @@ object ConstrainedKMeans {
             .toMap
           roundCks.foreach(graft.core.LineageCut.release)
           // a union of rounds is no input for the next iteration: its row
-          // order would change the next centroid sums' rounding, and a
-          // repair that maxRepair cut short lacks the points left in the
-          // pool — so the next iteration reads `pts`, and this cost takes
-          // its own pass
+          // order would change the next centroid sums' rounding — so the
+          // next iteration reads `pts`, and this cost takes its own pass
           settleNow(KMeansModel(ck, cents, Double.NaN, iters))
           cents
         }

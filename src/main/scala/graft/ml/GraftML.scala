@@ -148,19 +148,6 @@ class GraftDbscan(override val uid: String)
   def setMinPts(v: Int): this.type = set(minPts, v)
   def setKAnon(v: Int): this.type = set(kAnon, v)
 
-  /** Spec hook tightening the fitted-component ceiling below the real
-    * bound. The real bound is [[Dbscan.MaxAssignElements]] — components
-    * × DIM, since the collected centroid matrix ships with every
-    * transform plan, and both costs scale with the element count, not
-    * the component count alone (a 128-dim fit holds 16× fewer
-    * components than a dim-8 one at the same budget). Fits ABOVE the
-    * ceiling no longer refuse: they build a TABLE-backed model — the
-    * centroid frame never reaches the driver and transform routes
-    * through the distributed-exact probe join
-    * ([[graft.operators.CentroidJoin]]), so a 100 TB fit's millions of
-    * components still yield a working, saveable Model. */
-  private[graft] var maxModelClusters: Int = Int.MaxValue
-
   override def fit(dataset: Dataset[_]): GraftDbscanModel = {
     transformSchema(dataset.schema)
     val df = dataset.toDF()
@@ -168,32 +155,17 @@ class GraftDbscan(override val uid: String)
       featuresAsArray(df.schema).as("qi"))
     val k = if (isSet(kAnon)) $(kAnon) else $(minPts)
     val m = Dbscan.run(pts, "id", "qi", $(eps), $(minPts), k)
-    val dim = if (m.nClusters == 0) 1
-      else m.centroids.select(size(col("centroid"))).head().getInt(0)
-    val cap = math.min(maxModelClusters.toLong, Dbscan.maxAssignCentroids(dim))
-    val model = if (m.nClusters > cap) {
-      // past the element budget the matrix must NOT be collected: keep
-      // the centroid TABLE as the model's store, checkpointed into the
-      // model's own distributed storage BEFORE the engine model is
-      // released (the engine's persisted frames are this select's only
-      // warm lineage — same independence rule the kmeans wrapper pins)
-      val cdf = m.centroids.select(col("component"), col("centroid"))
-        .localCheckpoint()
-      new GraftDbscanModel(uid,
-        m.assignments.select(col("id"), col("component")),
-        IndexedSeq.empty, m.nClusters, m.nNoise, Some(cdf))
-    } else new GraftDbscanModel(uid,
+    val model = new GraftDbscanModel(uid,
       m.assignments.select(col("id"), col("component")),
       m.centroids.select(col("component"), col("centroid"))
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
         .sortBy(_._1).toIndexedSeq,
       m.nClusters, m.nNoise)
-    // the wrapper keeps only (id, component) + the centroid store;
+    // the wrapper keeps only (id, component) + the collected centroids;
     // release the engine model's persisted frames so a Pipeline fit
-    // doesn't leak cached blocks (the selected frames above were already
-    // materialized into the collect/checkpoint / stay lazy over parquet
-    // lineage)
+    // doesn't leak cached blocks (the assignment select is materialized
+    // into its own cache first)
     val assignments = model.assignments.cache()
     assignments.count()
     m.unpersist()
@@ -213,21 +185,15 @@ object GraftDbscan extends DefaultParamsReadable[GraftDbscan]
   * label; unseen ids get the nearest-centroid component (the engine's
   * noise-assign rule), null when the fit had no clusters.
   *
-  * Two centroid stores, chosen by the element budget: under
-  * [[Dbscan.MaxAssignElements]] the matrix is driver-collected
-  * (`centroids`, argmin via the pruned-exact kernel); above it
-  * `centroidsDf` holds the centroid TABLE (localCheckpoint storage —
-  * distributed, never driver-resident) and transform routes unseen rows
-  * through the distributed-exact probe join
-  * ([[graft.operators.CentroidJoin.assignExact]]). `release()` frees
-  * only the fitted-assignment cache, never the centroid store, so
-  * transform keeps working either way. */
+  * The centroid matrix is driver-collected (`centroids`, ascending by
+  * component id) and unseen rows take the pruned-exact argmin over it,
+  * like the engine's noise assign. `release()` frees only the
+  * fitted-assignment cache, so transform keeps working. */
 class GraftDbscanModel private[ml] (override val uid: String,
                                     @transient val assignments: DataFrame,
                                     val centroids: IndexedSeq[(Long, Array[Double])],
                                     val nClusters: Long,
-                                    val nNoise: Long,
-                                    @transient val centroidsDf: Option[DataFrame] = None)
+                                    val nNoise: Long)
   extends Model[GraftDbscanModel] with GraftClusterParams with MLWritable {
 
   override def transform(dataset: Dataset[_]): DataFrame = {
@@ -238,23 +204,13 @@ class GraftDbscanModel private[ml] (override val uid: String,
       col("component").as("__fit_comp"))
     val joined = in.join(asg,
       in(($(idCol))).cast("long") === asg("__fit_id"), "left")
-    // same regimes as the engine's noise assign: the pruned-exact argmin
-    // over the driver-held matrix, probe-bounded O(√k·dim) per row
-    // instead of a broadcast crossJoin's rows x k candidate blow-up
-    val withNearest = centroidsDf match {
-      case Some(cdf) =>
-        // table-backed regime: nothing collects or broadcasts — the
-        // coarse-bucket probe join is the only path that scales to the
-        // component counts this store exists for
-        graft.operators.CentroidJoin.assignExact(joined, $(idCol), "__qi",
-            cdf, "component", "centroid", "__nn_comp", "__nn_cent", "__nn_d")
-          .drop("__nn_cent")
-      case None if centroids.isEmpty =>
-        joined.withColumn("__nn_comp", lit(null).cast("long"))
-      case None =>
-        Dbscan.withPrunedNearest(joined, "__qi", centroids,
-          "__nn_comp", "__nn_d")
-    }
+    // the engine's noise-assign rule: the pruned-exact argmin over the
+    // driver-held matrix, probe-bounded O(√k·dim) per row instead of a
+    // broadcast crossJoin's rows x k candidate blow-up
+    val withNearest =
+      if (centroids.isEmpty) joined.withColumn("__nn_comp", lit(null).cast("long"))
+      else Dbscan.withPrunedNearest(joined, "__qi", centroids,
+        "__nn_comp", "__nn_d")
     withNearest
       .withColumn($(predictionCol),
         when(col("__fit_id").isNotNull, col("__fit_comp"))
@@ -272,7 +228,7 @@ class GraftDbscanModel private[ml] (override val uid: String,
 
   override def copy(extra: ParamMap): GraftDbscanModel =
     copyValues(new GraftDbscanModel(uid, assignments, centroids,
-      nClusters, nNoise, centroidsDf), extra).setParent(parent)
+      nClusters, nNoise), extra).setParent(parent)
 
   override def write: MLWriter = new GraftDbscanModel.Writer(this)
 }
@@ -291,23 +247,12 @@ object GraftDbscanModel extends MLReadable[GraftDbscanModel] {
           "nNoise" -> JLong(instance.nNoise)))
       instance.assignments.write.mode("overwrite")
         .parquet(new Path(path, "assignments").toString)
-      // ONE on-disk layout for both regimes — the reader re-derives the
-      // regime from the table's size, so a model saved table-backed on a
-      // big cluster loads collected on a box with a wider budget and
-      // vice versa
-      instance.centroidsDf match {
-        case Some(cdf) =>
-          cdf.select(col("component"), col("centroid"))
-            .write.mode("overwrite")
-            .parquet(new Path(path, "centroids").toString)
-        case None =>
-          val ss = sparkSession
-          import ss.implicits._
-          instance.centroids.map { case (c, arr) => (c, arr.toSeq) }
-            .toDF("component", "centroid").coalesce(1)
-            .write.mode("overwrite")
-            .parquet(new Path(path, "centroids").toString)
-      }
+      val ss = sparkSession
+      import ss.implicits._
+      instance.centroids.map { case (c, arr) => (c, arr.toSeq) }
+        .toDF("component", "centroid").coalesce(1)
+        .write.mode("overwrite")
+        .parquet(new Path(path, "centroids").toString)
     }
   }
 
@@ -317,21 +262,13 @@ object GraftDbscanModel extends MLReadable[GraftDbscanModel] {
       val meta = ModelIO.readMetadata(path, sparkSession)
       val assignments = sparkSession.read
         .parquet(new Path(path, "assignments").toString)
-      val cdf = sparkSession.read
+      val centroids = sparkSession.read
         .parquet(new Path(path, "centroids").toString)
-      val st = cdf.agg(count(lit(1)).as("k"),
-        max(size(col("centroid"))).as("dim")).head()
-      val k = st.getLong(0)
-      val dim = if (st.isNullAt(1)) 1 else math.max(1, st.getInt(1))
-      // same regime rule as fit: collect only under the element budget
-      val (centroids, centroidsDf) =
-        if (k <= graft.dbscan.Dbscan.maxAssignCentroids(dim))
-          (cdf.collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-            .sortBy(_._1).toIndexedSeq, None)
-        else (IndexedSeq.empty[(Long, Array[Double])], Some(cdf))
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+        .sortBy(_._1).toIndexedSeq
       val m = new GraftDbscanModel((meta \ "uid").extract[String],
         assignments, centroids, (meta \ "nClusters").extract[Long],
-        (meta \ "nNoise").extract[Long], centroidsDf)
+        (meta \ "nNoise").extract[Long])
       m.set(m.featuresCol, ModelIO.strParam(meta, "featuresCol"))
         .set(m.idCol, ModelIO.strParam(meta, "idCol"))
         .set(m.predictionCol, ModelIO.strParam(meta, "predictionCol"))

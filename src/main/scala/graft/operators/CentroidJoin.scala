@@ -5,12 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{BucketProbeIndex, Distances, VecKernels}
 
-/** Distributed-exact nearest-centroid assign for centroid sets too large
-  * to collect to the driver or broadcast — the regime PAST
-  * [[graft.dbscan.Dbscan.MaxAssignElements]], where the kernel and
-  * pruned-index paths (both driver-collected) stop being honest and the
-  * old fallback (broadcast crossJoin + group-min) shuffled rows × k
-  * candidate rows through a multi-GB broadcast.
+/** Distributed-exact nearest-centroid assign that never collects the
+  * centroid table to the driver — a gate-only operator: its one caller is
+  * the `assign_joined` gate, which checks it under the DuckDB oracle. The
+  * DBSCAN noise assign and the ML transform collect their centroids
+  * (a k-anonymous clustering has at most n/k of them) and take the
+  * pruned-exact kernel ([[graft.functions.VecKernels.pruned_nearest]]).
   *
   * Plan shape: the centroid TABLE stays distributed. A bounded coarse
   * summary — m ≈ √k centers (deterministic hash-ordered sample + one

@@ -709,8 +709,8 @@ object ClusterQueries {
         .orderBy("eps")
     }),
 
-    // The PRUNED-exact argmin (the >8k-cluster assign regime's kernel)
-    // under the oracle, over a deterministic 1024-centroid grid big
+    // The PRUNED-exact argmin (the DBSCAN noise assign's kernel) under
+    // the oracle, over a deterministic 1024-centroid grid big
     // enough that the triangle-inequality pruning actually engages
     // (32 coarse groups): same membership/cost contract as
     // kmeans_assign, so a pruning bug that returns any non-nearest
@@ -726,12 +726,11 @@ object ClusterQueries {
         .orderBy("cluster")
     }),
 
-    // The DISTRIBUTED-exact assign regime past the element budget
-    // (CentroidJoin: coarse-bucket probe + equi-join + min-struct — the
-    // path a 100 TB fit's millions of components take, where nothing may
-    // collect or broadcast) under the SAME row_number-argmin oracle and
-    // grid as assign_pruned: a probe that drops any true-nearest bucket,
-    // or a tiebreak drift in the min-struct, hash-fails here end to end.
+    // The DISTRIBUTED-exact assign (CentroidJoin: coarse-bucket probe +
+    // equi-join + min-struct, nothing collected or broadcast; no engine
+    // path calls it) under the SAME row_number-argmin oracle and grid as
+    // assign_pruned: a probe that drops any true-nearest bucket, or a
+    // tiebreak drift in the min-struct, hash-fails here end to end.
     "assign_joined" -> ((s, dir) => {
       import s.implicits._
       val cents = (0 until 1024).map(j => (j.toLong,

@@ -129,41 +129,6 @@ class CentroidJoinSpec extends GraftSuite {
     assert(e.getMessage.contains("uniform length"))
   }
 
-  test("Dbscan.run's above-budget regime routes through the probe join") {
-    import graft.dbscan.Dbscan
-    // 6 dense blobs (clusters) plus 4 isolated points that stay noise and
-    // exercise the noise→nearest-centroid path under both regimes
-    val pts = ((0 until 60).map { i =>
-      val blob = i % 6
-      (i.toLong, Array(blob * 30.0 + (i % 3) * 0.1, blob * 30.0))
-    } ++ (0 until 4).map(j =>
-      (100L + j, Array(500.0 + j * 40.0, -200.0 + j * 7.0)))).toDF("id", "qi")
-    // two inputs: run's assignments, and the batched sweep's records (one
-    // probe join per eps-block) over the same points
-    def runAsg() = {
-      val m = Dbscan.run(pts, "id", "qi", eps = 2.0, minPts = 3, k = 3)
-      try m.assignments
-        .select("id", "component", "is_noise", "an_err").collect().toSet
-      finally m.unpersist()
-    }
-    def sweepRecs() = {
-      val (recs, best) = Dbscan.sweep(pts, "id", "qi",
-        epsRange = Seq(0.05, 2.0, 45.0), minPts = 3, k = 3)
-      best.foreach(_._2.unpersist())
-      recs.map(r => (r.eps, r.nClusters, r.nNoise, r.clusterError,
-        r.noiseError))
-    }
-    val (baseAsg, baseRecs) = (runAsg(), sweepRecs())
-    assert(baseRecs.forall(r => r._2 > 0 && r._3 > 0),
-      "every radius must have clusters and noise to assign")
-    val saved = Dbscan.assignElementBudget
-    try {
-      Dbscan.assignElementBudget = 1L // every regime falls to the join
-      assert(runAsg() === baseAsg)
-      assert(sweepRecs() === baseRecs)
-    } finally Dbscan.assignElementBudget = saved
-  }
-
   test("probe index: NaN query probes all live buckets, dead stay out") {
     val idx = new BucketProbeIndex(
       flat = Array(0.0, 0.0, 100.0, 100.0, 50.0, 50.0),

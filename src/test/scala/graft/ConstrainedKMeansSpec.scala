@@ -163,10 +163,12 @@ class ConstrainedKMeansSpec extends GraftSuite {
     assert(sizes.values.count(_ < 4) <= 1, s"sizes: $sizes")
   }
 
-  /** One Lloyd iteration of [[referenceFit]]: its repair rounds, its cost
-    * and how many points its assignment holds (fewer than the input when
-    * `maxRepair` cut the repair short with points still in the pool). */
-  private case class RefIter(repairs: Int, cost: Double, rows: Long)
+  /** One Lloyd iteration of [[referenceFit]]: its repair rounds, its cost,
+    * how many points its assignment holds, and whether `maxRepair` cut the
+    * repair short (its last round still had ≥2 deficient clusters and
+    * assigned the whole pool). */
+  private case class RefIter(repairs: Int, cost: Double, rows: Long,
+                             cut: Boolean)
 
   /** The Lloyd loop as it was before the fit's one-aggregate form: a sizes
     * collect in every repair round, a centroid `avg` collect over the
@@ -197,7 +199,8 @@ class ConstrainedKMeansSpec extends GraftSuite {
         var roundCaches = List.empty[DataFrame]
         var repairs = 0
         var repairing = true
-        while (repairing && repairs < maxRepair) {
+        var cut = false
+        while (repairing) {
           repairs += 1
           val assigned = avail.withColumn("nc",
             ConstrainedKMeans.nearestCentroid(col("qi"), availCents.toSeq))
@@ -209,7 +212,7 @@ class ConstrainedKMeansSpec extends GraftSuite {
             .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
           val deficient = availCents.keySet
             .filter(c => sizesMap.getOrElse(c, 0L) < kAnon)
-          if (deficient.size > 1) {
+          if (deficient.size > 1 && repairs < maxRepair) {
             val w = Window.partitionBy("cluster").orderBy(col("d"), col("id"))
             val ranked = assigned.withColumn("rn", row_number().over(w))
             val kept = ranked.where(col("rn") <= kAnon).select("cluster", "id", "qi")
@@ -223,6 +226,7 @@ class ConstrainedKMeansSpec extends GraftSuite {
           } else {
             val fin = assigned.select("cluster", "id", "qi")
             completed = if (completed == null) fin else completed.unionByName(fin)
+            cut = deficient.size > 1
             repairing = false
           }
         }
@@ -240,7 +244,7 @@ class ConstrainedKMeansSpec extends GraftSuite {
         val cost = assignment.select(sum(Distances.l1(col("qi"),
             ConstrainedKMeans.centroidOf(newCentroids, col("cluster")))))
           .head().getDouble(0)
-        log += RefIter(repairs, cost, assignment.count())
+        log += RefIter(repairs, cost, assignment.count(), cut)
         if (model == null || cost < model.cost) {
           if (model != null) model.unpersist()
           model = KMeansModel(assignment, newCentroids, cost, iters)
@@ -310,11 +314,12 @@ class ConstrainedKMeansSpec extends GraftSuite {
     val c = matchesReference(spread60, 6, 8, seed = 1)
     assert(c.sliding(2).exists(p => p(0).repairs > 1 && p(1).repairs == 1),
       s"spread60 has no repaired → unrepaired step: $c")
-    // maxRepair cuts a repair short and leaves points in the pool: the
-    // next iteration must assign every point again
+    // maxRepair cuts a repair short: its last round assigns the whole
+    // pool, so no iteration drops a point
     val d = matchesReference(uniform120, 12, 9, seed = 1, maxLloyd = 5,
       maxRepair = 2)
-    assert(d.init.exists(_.rows < 120), s"uniform120 dropped no points: $d")
+    assert(d.exists(_.cut), s"uniform120 cut no repair short: $d")
+    assert(d.forall(_.rows == 120), s"uniform120 dropped points: $d")
   }
 
   /** Counts the Spark jobs of one job group. Listener delivery is

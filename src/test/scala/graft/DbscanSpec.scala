@@ -3,7 +3,9 @@ package graft
 import graft.core.QueryCache
 import graft.dbscan.{Cc, ClusterMode, Dbscan, DbscanModel, Scc}
 import graft.queries.ClusterQueries
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
 class DbscanSpec extends GraftSuite {
@@ -29,6 +31,49 @@ class DbscanSpec extends GraftSuite {
     (1L, Array(0.0)), (2L, Array(0.5)), (3L, Array(1.0)), (4L, Array(1.5)),
     (5L, Array(2.0)), (6L, Array(3.5))
   ).toDF("id", "qi")
+
+  /** 400 points with non-integer coordinates: 7 gaussian blobs of 52
+    * points and 36 points scattered far from them, so every radius used
+    * below has clusters and noise to assign. */
+  private def sevenBlobs = {
+    val rnd = new scala.util.Random(7)
+    val blobs = (0 until 364).map { i =>
+      val b = i % 7
+      (i.toLong, Array(b * 40.0 + 3.3 + rnd.nextGaussian(),
+        (b % 3) * 50.0 + 1.7 + rnd.nextGaussian()))
+    }
+    val scattered = (364 until 400).map(i => (i.toLong,
+      Array(rnd.nextDouble() * 300, 200 + rnd.nextDouble() * 150)))
+    (blobs ++ scattered).toDF("id", "qi")
+  }
+
+  /** The SQL actions (collect, count, head, …) `body` runs on the session.
+    * Listener delivery is asynchronous, so a marker action follows `body`
+    * and is awaited: the bus delivers events in order, so every earlier
+    * action is counted. */
+  private def sqlActions(body: => Unit): Int = {
+    val marker = "__sql_action_marker"
+    @volatile var actions = 0
+    @volatile var marked = false
+    val listener = new QueryExecutionListener {
+      private def seen(qe: QueryExecution): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) marked = true
+        else actions += 1
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = seen(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(lit(1).as(marker)).collect()
+      var i = 0
+      while (!marked && i < 400) { Thread.sleep(25); i += 1 }
+      assert(marked, "listener never saw the marker action")
+      actions
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("two blobs + noise: 2 clusters, 2 noise, correct membership") {
     val m = Dbscan.run(twoBlobs, "id", "qi", eps = 4.0, minPts = 3, k = 3)
@@ -269,6 +314,32 @@ class DbscanSpec extends GraftSuite {
     val distinctRows = pts.distinct().count()
     assert(total == distinctRows, "one output row per distinct input row")
     assert(m.clusterError > 0 && !m.totalError.isNaN)
+  }
+
+  test("a run and a sweep read each pass's per-ε numbers from one " +
+      "centroid collect plus one action") {
+    val pts = sevenBlobs
+    for (mode <- Seq[ClusterMode](Cc, Scc)) {
+      val run = sqlActions {
+        val m = Dbscan.run(pts, "id", "qi", eps = 3.0, minPts = 5, k = 5,
+          mode = mode)
+        assert(m.nClusters == 7 && m.nNoise > 0, s"$mode run: $m")
+        m.unpersist()
+      }
+      val sweep = sqlActions {
+        val (recs, best) = Dbscan.sweep(pts, "id", "qi",
+          epsRange = Seq(2.0, 3.0), minPts = 5, k = 5, mode = mode)
+        assert(recs.forall(r => r.nClusters > 0 && r.nNoise > 0),
+          s"$mode sweep: $recs")
+        best.foreach(_._2.unpersist())
+      }
+      info(s"$mode: run $run, sweep $sweep SQL actions")
+      // A pass reads its per-ε numbers from the centroid collect and one
+      // stats action. Three actions (stats, centroid collect, noise error)
+      // took 16 for a run and 18 for this sweep in both modes.
+      assert(run <= 15, s"$mode run: $run SQL actions")
+      assert(sweep <= 17, s"$mode sweep: $sweep SQL actions")
+    }
   }
 
   test("sweep on empty input returns zero records, no exception") {

@@ -220,55 +220,6 @@ class MLPipelineSpec extends GraftSuite {
     assert(bad.getMessage.contains("featuresCol"))
   }
 
-  test("above the element budget, fit builds a TABLE-backed model that " +
-      "transforms identically and round-trips") {
-    val base = new GraftDbscan().setIdCol("id").setFeaturesCol("features")
-      .setEps(Eps).setMinPts(MinPts).fit(assembled)
-    val want = base.transform(assembled)
-      .select("id", "prediction").as[(Long, Option[Long])].collect().toSet
-    val est = new GraftDbscan().setIdCol("id").setFeaturesCol("features")
-      .setEps(Eps).setMinPts(MinPts)
-    est.maxModelClusters = 0 // any fit now exceeds the "cap"
-    val dfModel = est.fit(assembled)
-    assert(dfModel.centroidsDf.isDefined && dfModel.centroids.isEmpty,
-      "forced-low cap did not produce the table-backed store")
-    val out = dfModel.transform(assembled)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"),
-      s"table-backed transform materializes rows x k:\n$plan")
-    val got = out.select("id", "prediction")
-      .as[(Long, Option[Long])].collect().toSet
-    assert(got == want, "table-backed labels diverge from the collected path")
-    // the probe join really scores UNSEEN rows (nearest-centroid rule)
-    val member = base.transform(assembled)
-      .where(col("prediction").isNotNull)
-      .select("x0", "x1", "prediction").head()
-    val unseen = new VectorAssembler().setInputCols(Array("x0", "x1"))
-      .setOutputCol("features").transform(
-        Seq((8888888L, member.getDouble(0), member.getDouble(1)))
-          .toDF("id", "x0", "x1"))
-    assert(dfModel.transform(unseen).select("prediction")
-      .as[Option[Long]].head().contains(member.getLong(2)))
-    // ONE on-disk layout: a table-backed save loads table-backed under a
-    // forced-low budget and transforms the same
-    val p = tmpDir("graft-dbscan-table-model")
-    dfModel.write.overwrite().save(p)
-    val saved = graft.dbscan.Dbscan.assignElementBudget
-    try {
-      graft.dbscan.Dbscan.assignElementBudget = 1L
-      val m2 = GraftDbscanModel.load(p)
-      assert(m2.centroidsDf.isDefined && m2.centroids.isEmpty)
-      val got2 = m2.transform(assembled).select("id", "prediction")
-        .as[(Long, Option[Long])].collect().toSet
-      assert(got2 == want, "loaded table-backed model transforms differently")
-    } finally graft.dbscan.Dbscan.assignElementBudget = saved
-    // and the SAME files load collected under the real budget
-    val m3 = GraftDbscanModel.load(p)
-    assert(m3.centroidsDf.isEmpty && m3.centroids.nonEmpty)
-    base.release(); dfModel.release()
-  }
-
   test("kmeans model storage is independent of the released engine model") {
     // fit releases the engine's localCheckpoint blocks; the wrapper's
     // assignment must be its OWN checkpoint leaf (not a select whose only

@@ -249,7 +249,7 @@ class PropertySpec extends GraftSuite {
   }
 
   test("pruned nearest-centroid equals the exhaustive scan on random matrices (property)") {
-    // the >8k-cluster assign regime: triangle-inequality pruning must be
+    // the noise-assign kernel: triangle-inequality pruning must be
     // EXACT — same component id AND bit-equal distance as a full scan —
     // for any k (including k < 4 where no real grouping exists), any
     // dim, clustered or uniform centroids, and duplicate centroids
@@ -290,8 +290,8 @@ class PropertySpec extends GraftSuite {
 
   test("pruned nearest matches the kernel bit-for-bit on ragged and NaN input") {
     import org.apache.spark.sql.catalyst.util.ArrayData
-    // the two assign regimes (kernel <=8k clusters, pruned above) must
-    // agree on EVERY input the kernel accepts, including the edges:
+    // the pruned argmin and the exhaustive kernel must agree on EVERY
+    // input the kernel accepts, including the edges:
     //  - ragged queries (shorter than dim): the kernel compares over
     //    min(numElements, dim) and ignores the centroid tail
     //  - NaN in the query: every comparison is false, so the kernel's
