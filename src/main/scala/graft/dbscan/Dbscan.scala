@@ -56,22 +56,28 @@ final case class SweepRecord(eps: Double, nClusters: Long, nNoise: Long,
 object Dbscan {
 
   /** Adds (`ccName`, `dName`) = (nearest centroid's component id, its L1
-    * distance) via the triangle-inequality-pruned exact argmin
-    * ([[graft.functions.VecKernels.pruned_nearest]]) — one narrow
-    * projection with the centroid matrix and its component ids riding as
-    * one reference object, so the plan stays O(1) in k; per-row cost is
-    * O(√k·dim) expected. Ties go to the lowest component id (the
-    * min-struct tiebreak). The noise assign of [[cluster]] and of the ML
-    * transform. `sorted` MUST be ascending by component id. A null vector
-    * yields null in both columns. */
-  private[graft] def withPrunedNearest(df: DataFrame, qiCol: String,
-                                sorted: IndexedSeq[(Long, Array[Double])],
-                                ccName: String, dName: String): DataFrame =
-    df.withColumn("__pn",
-        graft.functions.VecKernels.pruned_nearest(col(qiCol), sorted))
-      .withColumn(ccName, col("__pn.component"))
-      .withColumn(dName, col("__pn.d"))
-      .drop("__pn")
+    * distance) via the exhaustive nearest-centroid kernel
+    * ([[graft.functions.VecKernels.nearest_centroids]], the k-means
+    * assign's kernel) — one narrow projection with the centroid matrix
+    * riding as a reference object, so the plan stays O(1) in k. The
+    * kernel labels centroids by their position in `sorted`; one
+    * array-literal lookup maps the winning position back to its Long
+    * component id. `sorted` MUST be ascending by component id, so the
+    * kernel's ties to the lowest position are ties to the lowest
+    * component id (the min-struct tiebreak). The noise assign of
+    * [[cluster]] and of the ML transform. A null vector yields null in
+    * both columns. */
+  private[graft] def withNearest(df: DataFrame, qiCol: String,
+                                 sorted: IndexedSeq[(Long, Array[Double])],
+                                 ccName: String, dName: String): DataFrame = {
+    val byPosition = sorted.indices.map(i => i -> sorted(i)._2)
+    df.withColumn("__nc", element_at(graft.functions.VecKernels
+        .nearest_centroids(col(qiCol), byPosition, 1, cosine = false), 1))
+      .withColumn(ccName,
+        element_at(typedLit(sorted.map(_._1)), col("__nc.cluster") + 1))
+      .withColumn(dName, col("__nc.d"))
+      .drop("__nc")
+  }
 
   /** The ε-blocks one [[cluster]] pass labels at once: block `ei` is the
     * ε-graph at radius `eps(ei)`, its vertex ids namespaced to
@@ -135,11 +141,12 @@ object Dbscan {
     * rule, core → neighbour edges, components, k-anonymity, centroids,
     * the noise → nearest-centroid assign, and per-block stats from one
     * centroid collect plus one action. `pts` is (id, qi) with unique
-    * ids. Records carry `seconds = 0`.
+    * ids and `dim`-long vectors; the caller reads `dim` ([[sweep]] from
+    * the id-range action it runs anyway). Records carry `seconds = 0`.
     */
-  private def cluster(pts: DataFrame, tagged: DataFrame, blocks: Blocks,
-                      minPts: Int, k: Int, mode: ClusterMode): Clustered = {
-    val dim = pts.select(size(col("qi"))).head().getInt(0)
+  private def cluster(pts: DataFrame, dim: Int, tagged: DataFrame,
+                      blocks: Blocks, minPts: Int, k: Int,
+                      mode: ClusterMode): Clustered = {
     val pairs = tagged.select(
       blocks.vertex(col("ei"), col("a_id")).as("a_id"), col("a_w"),
       blocks.vertex(col("ei"), col("b_id")).as("b_id"), col("b_w"))
@@ -185,14 +192,14 @@ object Dbscan {
 
     try {
       // Noise → nearest same-block centroid, L1, ties to the lowest
-      // component id (assign_nearest, DBSCAN.py:126-133): the pruned-exact
+      // component id (assign_nearest, DBSCAN.py:126-133): the exhaustive
       // kernel over each block's collected centroid matrix, one pass over
       // the noise rows instead of a crossJoin that shuffles
       // |noise|·|clusters| candidate rows through a group-min. A
       // k-anonymous clustering has at most n/k centroids, so the table
       // collects like the reference's broadcast list (DBSCAN.py:188); a
       // block's row count is its cluster count. Components ascend per
-      // block — the kernel's documented precondition (collect order is
+      // block — [[withNearest]]'s precondition (collect order is
       // arbitrary).
       val byBlock = centroids
         .select(blocks.of("component"), col("component"), col("centroid"))
@@ -209,7 +216,7 @@ object Dbscan {
           .select(col("id"), col("qi"))
         byBlock.get(ei) match {
           case Some(cents) =>
-            withPrunedNearest(noiseIn, "qi", cents, "cc", "an_err")
+            withNearest(noiseIn, "qi", cents, "cc", "an_err")
           case None => noiseIn.select(col("id"), col("qi"),
             lit(null).cast("long").as("cc"),
             lit(null).cast("double").as("an_err"))
@@ -352,7 +359,8 @@ object Dbscan {
     val pairs = pairsOpt.getOrElse(NeighborJoin
       .epsJoinGrid(pts, "id", "qi", eps, blockDims)
       .persist(StorageLevel.MEMORY_AND_DISK))
-    val c = try cluster(pts.select("id", "qi"),
+    val dim = pts.select(size(col("qi"))).head().getInt(0)
+    val c = try cluster(pts.select("id", "qi"), dim,
         pairs.select(lit(0).as("ei"), col("a_id"), col("a_w"), col("b_id"),
           col("b_w")),
         Blocks(Seq(eps)), minPts, k, mode)
@@ -411,11 +419,13 @@ object Dbscan {
     val pts = points.select(col(idCol).cast("long").as("id"),
       col(qiCol).as("qi"), w.as("w"))
     // empty-input check BEFORE any head() on the points — head() on an
-    // empty Dataset throws, the agg always returns one row
-    val idRow = pts.agg(min("id"), max("id")).head()
+    // empty Dataset throws, the agg always returns one row. The same
+    // action sizes the centroid aggregate.
+    val idRow = pts.agg(min("id"), max("id"), max(size(col("qi")))).head()
     if (idRow.isNullAt(0))
       return (epsRange.map(e => SweepRecord(e, 0, 0, 0.0, 0.0, 0.0, 0.0)), None)
-    val (minId, maxId) = (idRow.getLong(0), idRow.getLong(1))
+    val (minId, maxId, dim) =
+      (idRow.getLong(0), idRow.getLong(1), idRow.getInt(2))
 
     // only the columns the core reads survive the persist — the qi
     // arrays (the wide part of the join output) are re-joined from the
@@ -441,7 +451,7 @@ object Dbscan {
       var kept: Option[(Clustered, Int)] = None
       def err(b: (Clustered, Int)) = b._1.records(b._2).totalError
       def pass(t: DataFrame, blocks: Blocks): Seq[SweepRecord] = {
-        val c = cluster(pts.select("id", "qi"), t, blocks, minPts, k, mode)
+        val c = cluster(pts.select("id", "qi"), dim, t, blocks, minPts, k, mode)
         val finite = c.records.indices
           .filter(c.records(_).totalError.isFinite).map((c, _))
         val winner = (kept ++ finite)

@@ -187,7 +187,10 @@ object VecKernels {
     * ascending by (d, cluster). The centroid matrix rides along as a
     * codegen reference object — expression-tree size is O(1) in the number
     * of centroids, so nlist can be 64k without hitting the JVM 64KB
-    * codegen method limit that literal-folded centroids do. */
+    * codegen method limit that literal-folded centroids do. At k = 1 this
+    * is the engine's one L1 argmin: the k-means assign, the DBSCAN noise
+    * assign ([[graft.dbscan.Dbscan.withNearest]]), the ML transforms and
+    * [[graft.operators.CentroidJoin]]'s bucketing. */
   def nearest_centroids(vec: Column, cents: Seq[(Int, Array[Double])], k: Int,
                         cosine: Boolean): Column = {
     val sorted = cents.sortBy(_._1)
@@ -201,33 +204,6 @@ object VecKernels {
     }
     ColumnBridge.column(NearestCentroidsExpr(ColumnBridge.expression(vec),
       ids, flat, dim, cosine, k))
-  }
-
-  // ------------------------------------------- pruned exact argmin kernel
-
-  /** `struct<component,d>` of the single nearest centroid (L1, ties to
-    * the lowest component id) — EXACT like the exhaustive
-    * [[nearest_centroids]] kernel (same per-member summation order, so
-    * distances are bit-equal), but probe-bounded per row via
-    * triangle-inequality pruning over coarse groups
-    * ([[PrunedCentroidIndex]]). The DBSCAN noise assign and the ML
-    * transform at every cluster count: the exhaustive kernel's O(k)
-    * per-row scan (and a broadcast crossJoin's rows x k candidate
-    * shuffle) grow with the component count, this does not. `sorted`
-    * must be ascending by component id. */
-  def pruned_nearest(vec: Column,
-                     sorted: IndexedSeq[(Long, Array[Double])]): Column = {
-    require(sorted.nonEmpty, "pruned_nearest: empty centroid set")
-    val ids = sorted.map(_._1).toArray
-    val dim = sorted.head._2.length
-    val flat = new Array[Double](ids.length * dim)
-    var c = 0
-    while (c < ids.length) {
-      System.arraycopy(sorted(c)._2, 0, flat, c * dim, dim)
-      c += 1
-    }
-    ColumnBridge.column(PrunedNearestExpr(ColumnBridge.expression(vec),
-      new PrunedCentroidIndex(ids, flat, dim)))
   }
 
   // ------------------------------------ distributed-assign bucket probe
@@ -347,304 +323,13 @@ case class NearestCentroidsExpr(child: Expression, ids: Array[Int],
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** Exact L1 nearest-centroid index with triangle-inequality pruning.
-  *
-  * The k centroids are partitioned into m ≈ √k coarse groups by a short
-  * deterministic Lloyd refinement of a strided init over the id-sorted
-  * matrix; each group stores its mean center and radius (max L1 from the
-  * center to a member). Per query: distances to the m centers (O(m·dim)),
-  * then the most promising group is scanned first and every other group
-  * is skipped when its lower bound `d(x, center) − radius > best` — the
-  * triangle inequality makes the skip EXACT, so labels and distances are
-  * identical to the exhaustive scan (ties to the lowest component id,
-  * same accumulation order ⇒ bit-equal d). Expected per-row work is
-  * O(√k·dim) on clustered centroid sets, worst case O(k·dim).
-  *
-  * Ragged inputs follow the exhaustive kernel exactly: a query shorter
-  * than `dim` is compared over its own length only (the centroid tail is
-  * ignored, [[VecKernels.topCentroids]]'s `n = min(numElements, dim)`).
-  * The group radii are computed over the FULL dim, so they over-estimate
-  * the truncated-subspace radius and the triangle skip stays exact —
-  * pruning just engages less. A NaN anywhere (query or centroid matrix)
-  * breaks every pruning comparison, so those rows/matrices take a
-  * matrix-order exhaustive fallback that replicates the kernel's
-  * insertion semantics bit for bit (an all-NaN distance row yields the
-  * FIRST centroid, like the kernel's unconditional first insert).
-  *
-  * The grouping is built lazily on first use and is `@transient`: the
-  * shipped plan carries only the raw (ids, flat) matrix. Spark
-  * deserializes the task binary (and this object with it) once per TASK,
-  * so the deterministic build is shared through a per-JVM content-keyed
-  * cache — one build per distinct matrix per executor, not per task. */
-final class PrunedCentroidIndex(val ids: Array[Long], val flat: Array[Double],
-                                val dim: Int) extends Serializable {
-  import PrunedCentroidIndex._
-  require(ids.length > 0 && flat.length == ids.length * dim,
-    s"PrunedCentroidIndex: ${ids.length} ids, ${flat.length} values, dim $dim")
-
-  @transient private lazy val built: Built = cachedBuild(this)
-  /** Spec hook: the per-JVM cache must hand content-equal instances the
-    * SAME build (reference equality) without a per-instance rebuild. */
-  private[graft] def builtRef: AnyRef = built
-
-  private[functions] def build(): Built = {
-    BuildCount.incrementAndGet()
-    var nan = false
-    var ni = 0
-    while (ni < flat.length && !nan) { if (flat(ni) != flat(ni)) nan = true; ni += 1 }
-    if (nan) // groups would be NaN-centered and unprunable; nearest()
-      return Built(0, Array(0), Array.emptyIntArray,   // falls back to the
-        Array.emptyDoubleArray, Array.emptyDoubleArray, // matrix-order scan
-        degenerate = true)
-    val k = ids.length
-    val m = math.min(math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt), MaxGroups)
-    // strided deterministic init over the id-sorted matrix
-    val centers = Array.tabulate(m) { j =>
-      val src = (j.toLong * k / m).toInt
-      java.util.Arrays.copyOfRange(flat, src * dim, src * dim + dim)
-    }
-    val assign = new Array[Int](k)
-    var iter = 0
-    while (iter <= LloydIters) {
-      var c = 0
-      while (c < k) {
-        var best = 0; var bestD = Double.MaxValue
-        var j = 0
-        while (j < m) {
-          val cj = centers(j)
-          var d = 0.0; var i = 0
-          while (i < dim) { d += math.abs(flat(c * dim + i) - cj(i)); i += 1 }
-          if (d < bestD) { bestD = d; best = j }
-          j += 1
-        }
-        assign(c) = best
-        c += 1
-      }
-      if (iter < LloydIters) {
-        // recompute means; an empty group keeps its center
-        val sums = Array.ofDim[Double](m, dim)
-        val counts = new Array[Int](m)
-        var c2 = 0
-        while (c2 < k) {
-          val g = assign(c2); counts(g) += 1
-          var i = 0
-          while (i < dim) { sums(g)(i) += flat(c2 * dim + i); i += 1 }
-          c2 += 1
-        }
-        var j = 0
-        while (j < m) {
-          if (counts(j) > 0) {
-            var i = 0
-            while (i < dim) { sums(j)(i) /= counts(j); i += 1 }
-            centers(j) = sums(j)
-          }
-          j += 1
-        }
-      }
-      iter += 1
-    }
-    // group-contiguous reorder, stable by index (= ascending component id
-    // within a group, so a sequential scan meets lower ids first)
-    val counts = new Array[Int](m)
-    var c = 0
-    while (c < k) { counts(assign(c)) += 1; c += 1 }
-    val start = new Array[Int](m + 1)
-    var j = 0
-    while (j < m) { start(j + 1) = start(j) + counts(j); j += 1 }
-    val cursor = start.clone()
-    val order = new Array[Int](k)
-    c = 0
-    while (c < k) { val g = assign(c); order(cursor(g)) = c; cursor(g) += 1; c += 1 }
-    val gFlat = new Array[Double](m * dim)
-    j = 0
-    while (j < m) { System.arraycopy(centers(j), 0, gFlat, j * dim, dim); j += 1 }
-    val radii = new Array[Double](m)
-    var g = 0
-    while (g < m) {
-      var r = 0.0
-      var p = start(g)
-      while (p < start(g + 1)) {
-        val c0 = order(p)
-        var d = 0.0; var i = 0
-        while (i < dim) { d += math.abs(flat(c0 * dim + i) - gFlat(g * dim + i)); i += 1 }
-        if (d > r) r = d
-        p += 1
-      }
-      radii(g) = r
-      g += 1
-    }
-    Built(m, start, order, gFlat, radii, degenerate = false)
-  }
-
-  /** (nearest component id, L1 distance) as an InternalRow — bit-equal
-    * to the exhaustive kernel's top-1. Called from generated code. */
-  def nearest(vec: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {
-    val b = built
-    val m = b.m
-    // the exhaustive kernel compares over min(numElements, dim) — a
-    // ragged (short) query ignores the centroid tail; match it exactly
-    val n = math.min(vec.numElements(), dim)
-    val x = new Array[Double](n)
-    var qNaN = false
-    var i = 0
-    while (i < n) {
-      val xi = vec.getDouble(i); x(i) = xi
-      if (xi != xi) qNaN = true
-      i += 1
-    }
-    if (qNaN || b.degenerate) return exhaustive(x, n)
-    val dg = new Array[Double](m)
-    var gBest = 0; var gBestD = Double.MaxValue
-    var g = 0
-    while (g < m) {
-      var d = 0.0; i = 0
-      while (i < n) { d += math.abs(x(i) - b.gFlat(g * dim + i)); i += 1 }
-      dg(g) = d
-      if (d < gBestD) { gBestD = d; gBest = g }
-      g += 1
-    }
-    var bestD = Double.MaxValue
-    var bestId = Long.MaxValue
-    def scanGroup(grp: Int): Unit = {
-      var p = b.start(grp)
-      val end = b.start(grp + 1)
-      while (p < end) {
-        val c0 = b.order(p)
-        var d = 0.0; var i2 = 0
-        while (i2 < n) { d += math.abs(x(i2) - flat(c0 * dim + i2)); i2 += 1 }
-        val cid = ids(c0)
-        if (d < bestD || (d == bestD && cid < bestId)) { bestD = d; bestId = cid }
-        p += 1
-      }
-    }
-    // most promising group first tightens `best` before the prune pass;
-    // skip is EXACT only when the bound strictly exceeds best (an equal
-    // bound can still hide an equal-distance lower component id). The
-    // radii are full-dim, so for a ragged query (n < dim) the bound only
-    // widens — never prunes a truncated-subspace survivor.
-    scanGroup(gBest)
-    g = 0
-    while (g < m) {
-      if (g != gBest && dg(g) - b.radii(g) <= bestD) scanGroup(g)
-      g += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](bestId, bestD))
-  }
-
-  /** Matrix-order exhaustive scan replicating [[VecKernels.topCentroids]]
-    * at k=1 bit for bit, including its NaN quirk: the first centroid is
-    * seeded unconditionally, later ones win only on a strict (d, id)
-    * improvement — NaN comparisons are false, so an all-NaN row keeps
-    * centroid 0 exactly like the kernel's unconditional first insert. */
-  private def exhaustive(x: Array[Double], n: Int)
-      : org.apache.spark.sql.catalyst.InternalRow = {
-    var bestD = 0.0; var bestId = 0L
-    var c = 0
-    while (c < ids.length) {
-      var d = 0.0; var i = 0
-      while (i < n) { d += math.abs(x(i) - flat(c * dim + i)); i += 1 }
-      val cid = ids(c)
-      if (c == 0 || d < bestD || (d == bestD && cid < bestId)) {
-        bestD = d; bestId = cid
-      }
-      c += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](bestId, bestD))
-  }
-}
-
-object PrunedCentroidIndex {
-  private[functions] final case class Built(
-      m: Int, start: Array[Int], order: Array[Int],
-      gFlat: Array[Double], radii: Array[Double], degenerate: Boolean)
-
-  /** Coarse-group count ceiling: √k capped so the per-row center scan
-    * stays bounded even at extreme k. */
-  val MaxGroups = 4096
-  /** Lloyd refinement passes over the strided init — enough to give the
-    * groups spatial locality (what the radii/pruning feed on) without a
-    * meaningful build cost. */
-  val LloydIters = 2
-
-  /** Per-JVM build cache. Each TASK deserializes its own copy of the
-    * index (the task binary carries the plan's reference objects), so
-    * without sharing the O(LloydIters·k·√k·dim) build would rerun per
-    * partition — at the top of the regime that is more work than the
-    * scan it accelerates. The key fingerprints the matrix CONTENT
-    * (lengths + both array hashes + value sum), so deserialized copies
-    * of the same matrix share one deterministic build while distinct
-    * matrices (several concurrent models) coexist. Bounded: a cache
-    * past [[CacheMax]] entries is cleared before insert — builds are
-    * recomputable, this only bounds retained memory. */
-  private final case class Key(k: Int, dim: Int, idsHash: Int,
-                               flatHash: Int, flatSumBits: Long)
-  private val buildCache =
-    new java.util.concurrent.ConcurrentHashMap[Key, Built]()
-  private val CacheMax = 32
-  /** Total build() executions in this JVM — spec hook for the
-    * build-once-per-content contract. */
-  private[graft] val BuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private def cachedBuild(idx: PrunedCentroidIndex): Built = {
-    var s = 0.0
-    var i = 0
-    while (i < idx.flat.length) { s += idx.flat(i); i += 1 }
-    // sum as bits: a NaN-bearing (degenerate) matrix must still key
-    // consistently — primitive NaN == NaN is false and would dodge the
-    // cache on every lookup
-    val key = Key(idx.ids.length, idx.dim,
-      java.util.Arrays.hashCode(idx.ids),
-      java.util.Arrays.hashCode(idx.flat),
-      java.lang.Double.doubleToLongBits(s))
-    if (buildCache.size > CacheMax) buildCache.clear()
-    buildCache.computeIfAbsent(key, _ => idx.build())
-  }
-}
-
-/** Top-1 pruned-exact nearest centroid; see
-  * [[VecKernels.pruned_nearest]] and [[PrunedCentroidIndex]]. Equality
-  * and hashCode compare the index's array CONTENTS (reference equality
-  * would defeat `semanticEquals`/`ReuseExchange` across analyzer-cloned
-  * instances — same reasoning as [[NearestCentroidsExpr]]). */
-case class PrunedNearestExpr(child: Expression, index: PrunedCentroidIndex)
-    extends UnaryExpression {
-  override def equals(other: Any): Boolean = other match {
-    case o: PrunedNearestExpr =>
-      child == o.child && index.dim == o.index.dim &&
-        java.util.Arrays.equals(index.ids, o.index.ids) &&
-        java.util.Arrays.equals(index.flat, o.index.flat)
-    case _ => false
-  }
-  override def hashCode(): Int = {
-    var h = child.hashCode()
-    h = h * 31 + java.util.Arrays.hashCode(index.ids)
-    h = h * 31 + java.util.Arrays.hashCode(index.flat)
-    h * 31 + index.dim
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("component", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("d", DoubleType, nullable = false)))
-  override def toString: String = s"pruned_nearest($child, ${index.ids.length})"
-  protected override def nullSafeEval(v: Any): Any =
-    index.nearest(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val idxRef = ctx.addReferenceObj("prunedCentroidIndex", index,
-      classOf[PrunedCentroidIndex].getName)
-    defineCodeGen(ctx, ev, v => s"$idxRef.nearest($v)")
-  }
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
 /** Coarse-bucket probe table for the DISTRIBUTED-exact nearest-centroid
   * assign join ([[graft.operators.CentroidJoin.assignExact]]): m coarse
   * centers (flat, row-major, every row exactly `dim` long) with the L1
   * radius of each bucket (max member distance to its center; `live(g)`
   * false marks a bucket that received no centroids and must never be
-  * probed). Unlike [[PrunedCentroidIndex]] this holds only the O(√k·dim)
-  * COARSE summary — the k-row centroid matrix itself stays distributed.
+  * probed). It holds only the O(√k·dim) COARSE summary — the k-row
+  * centroid matrix itself stays distributed.
   *
   * Exactness (L1, zip-to-common-prefix semantics): for a query q with
   * effective length n = min(|q|, dim) and any centroid c of length dim in
@@ -658,10 +343,9 @@ case class PrunedNearestExpr(child: Expression, index: PrunedCentroidIndex)
   * global argmin with the broadcast-crossJoin branch's tie semantics.
   * Radii are computed over the full dim, so for a ragged (short) query
   * they over-estimate the truncated-subspace radius and the skip stays
-  * exact — pruning just engages less (same argument as
-  * [[PrunedCentroidIndex]]). Centroids MUST be uniformly `dim` long —
-  * [[graft.operators.CentroidJoin]] enforces that loudly, because a
-  * centroid SHORTER than the query would flip the bound's direction. */
+  * exact — pruning just engages less. Centroids MUST be uniformly `dim`
+  * long — [[graft.operators.CentroidJoin]] enforces that loudly, because
+  * a centroid SHORTER than the query would flip the bound's direction. */
 final class BucketProbeIndex(val flat: Array[Double], val radii: Array[Double],
                              val live: Array[Boolean], val dim: Int)
     extends Serializable {
@@ -719,7 +403,7 @@ final class BucketProbeIndex(val flat: Array[Double], val radii: Array[Double],
 /** Candidate-bucket probe; see [[VecKernels.bucket_probe]] and
   * [[BucketProbeIndex]]. Equality/hashCode compare the index's array
   * CONTENTS (reference equality would defeat `semanticEquals` across
-  * analyzer-cloned instances — same reasoning as [[PrunedNearestExpr]]). */
+  * analyzer-cloned instances — same reasoning as [[NearestCentroidsExpr]]). */
 case class BucketProbeExpr(child: Expression, index: BucketProbeIndex)
     extends UnaryExpression {
   override def equals(other: Any): Boolean = other match {

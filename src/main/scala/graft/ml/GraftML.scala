@@ -24,8 +24,8 @@ import org.apache.spark.sql.types._
   * The wrappers are THIN by design: fitting delegates to the existing
   * engines ([[graft.dbscan.Dbscan.run]], [[graft.kmeans.ConstrainedKMeans
   * .fit]]) — no dataflow is re-implemented, so everything the engine pins
-  * (grid-blocked ε-join, skew-safe CC, codegen argmin kernels) is what a
-  * Pipeline user gets.
+  * (grid-blocked ε-join, large-star/small-star CC, the codegen argmin
+  * kernel) is what a Pipeline user gets.
   *
   * Transform semantics (both models): a row whose id was seen at fit time
   * gets its FITTED label (DBSCAN component / constrained-k-means cluster —
@@ -186,8 +186,8 @@ object GraftDbscan extends DefaultParamsReadable[GraftDbscan]
   * noise-assign rule), null when the fit had no clusters.
   *
   * The centroid matrix is driver-collected (`centroids`, ascending by
-  * component id) and unseen rows take the pruned-exact argmin over it,
-  * like the engine's noise assign. `release()` frees only the
+  * component id) and unseen rows take the exhaustive argmin kernel over
+  * it, like the engine's noise assign. `release()` frees only the
   * fitted-assignment cache, so transform keeps working. */
 class GraftDbscanModel private[ml] (override val uid: String,
                                     @transient val assignments: DataFrame,
@@ -204,13 +204,12 @@ class GraftDbscanModel private[ml] (override val uid: String,
       col("component").as("__fit_comp"))
     val joined = in.join(asg,
       in(($(idCol))).cast("long") === asg("__fit_id"), "left")
-    // the engine's noise-assign rule: the pruned-exact argmin over the
-    // driver-held matrix, probe-bounded O(√k·dim) per row instead of a
+    // the engine's noise-assign rule: the exhaustive argmin kernel over
+    // the driver-held matrix, one narrow projection instead of a
     // broadcast crossJoin's rows x k candidate blow-up
     val withNearest =
       if (centroids.isEmpty) joined.withColumn("__nn_comp", lit(null).cast("long"))
-      else Dbscan.withPrunedNearest(joined, "__qi", centroids,
-        "__nn_comp", "__nn_d")
+      else Dbscan.withNearest(joined, "__qi", centroids, "__nn_comp", "__nn_d")
     withNearest
       .withColumn($(predictionCol),
         when(col("__fit_id").isNotNull, col("__fit_comp"))

@@ -9,8 +9,9 @@ import graft.functions.{BucketProbeIndex, Distances, VecKernels}
   * centroid table to the driver — a gate-only operator: its one caller is
   * the `assign_joined` gate, which checks it under the DuckDB oracle. The
   * DBSCAN noise assign and the ML transform collect their centroids
-  * (a k-anonymous clustering has at most n/k of them) and take the
-  * pruned-exact kernel ([[graft.functions.VecKernels.pruned_nearest]]).
+  * (a k-anonymous clustering has at most n/k of them) and scan them with
+  * the exhaustive kernel ([[graft.functions.VecKernels.nearest_centroids]]),
+  * the one this operator also uses to bucket the centroid table.
   *
   * Plan shape: the centroid TABLE stays distributed. A bounded coarse
   * summary — m ≈ √k centers (deterministic hash-ordered sample + one
@@ -41,12 +42,12 @@ object CentroidJoin {
   /** Coarse-center count ceiling. */
   val MaxCoarse = 65536
   /** Driver/plan element budget for the coarse summary (flat centers +
-    * radii) — 2^22 doubles = 32 MB, half the pruned index's budget since
-    * this object rides every task binary of the probe stage. */
+    * radii) — 2^22 doubles = 32 MB, since this object rides every task
+    * binary of the probe stage. */
   val MaxCoarseElements: Long = 1L << 22
   /** Distributed Lloyd refinement passes over the sampled init — one
     * pass gives the buckets the spatial locality the radii feed on;
-    * more buys little (same finding as [[graft.functions.PrunedCentroidIndex]]). */
+    * more buys little. */
   val LloydIters = 1
 
   /** Appends (`ccName`, `centName`, `dName`) = (nearest centroid's
@@ -95,16 +96,16 @@ object CentroidJoin {
     val mEff = centers.length
 
     // Distributed Lloyd pass(es): assign every centroid to its nearest
-    // coarse center (probe-bounded pruned argmin — the coarse set itself
-    // can reach 64k), then recompute means as a map-side-combined
+    // coarse center (the exhaustive kernel, ties to the lowest bucket
+    // id), then recompute means as a map-side-combined
     // groupBy over (bucket, dim position). m·dim result rows ≤ the
     // element budget by construction. An empty bucket keeps its center.
+    def nearestBucket(cs: Array[Array[Double]]) = element_at(
+      VecKernels.nearest_centroids(col("__cent"),
+        cs.indices.map(g => g -> cs(g)), 1, cosine = false), 1)
     for (_ <- 0 until LloydIters) {
-      val coarseSeq: IndexedSeq[(Long, Array[Double])] =
-        centers.indices.map(g => g.toLong -> centers(g))
       val sums = cents.select(
-          VecKernels.pruned_nearest(col("__cent"), coarseSeq)
-            .getField("component").cast("int").as("__b"),
+          nearestBucket(centers).getField("cluster").as("__b"),
           posexplode(col("__cent")).as(Seq("__p", "__v")))
         .groupBy("__b", "__p")
         .agg(sum("__v").as("s"), count(lit(1)).as("n"))
@@ -118,16 +119,14 @@ object CentroidJoin {
     }
 
     // Final bucket table + radii. The table is NOT persisted: its
-    // recompute is one narrow probe-bounded scan of the centroid table,
-    // and pinning a cache here would strand blocks past the caller's
-    // lifecycle (callers that reuse the result persist downstream).
-    val coarseSeq: IndexedSeq[(Long, Array[Double])] =
-      centers.indices.map(g => g.toLong -> centers(g))
+    // recompute is one narrow scan of the centroid table, and pinning a
+    // cache here would strand blocks past the caller's lifecycle
+    // (callers that reuse the result persist downstream).
     val bucketed = cents.select(col("__cc"), col("__cent"),
-      VecKernels.pruned_nearest(col("__cent"), coarseSeq).as("__pn"))
+      nearestBucket(centers).as("__nb"))
       .select(col("__cc"), col("__cent"),
-        col("__pn").getField("component").cast("int").as("__b"),
-        col("__pn").getField("d").as("__d"))
+        col("__nb").getField("cluster").as("__b"),
+        col("__nb").getField("d").as("__d"))
 
     // max() keeps NaN greatest, so a NaN-bearing member poisons its
     // bucket's radius to NaN and the probe then always scans that bucket

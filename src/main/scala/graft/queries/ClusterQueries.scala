@@ -709,18 +709,18 @@ object ClusterQueries {
         .orderBy("eps")
     }),
 
-    // The PRUNED-exact argmin (the DBSCAN noise assign's kernel) under
-    // the oracle, over a deterministic 1024-centroid grid big
-    // enough that the triangle-inequality pruning actually engages
-    // (32 coarse groups): same membership/cost contract as
-    // kmeans_assign, so a pruning bug that returns any non-nearest
-    // centroid hash-fails here, not just in PropertySpec.
+    // The DBSCAN noise assign (Dbscan.withNearest: the exhaustive
+    // kernel kmeans_assign checks, plus the position → Long component id
+    // lookup) under the oracle, over a deterministic 1024-centroid grid
+    // with Long ids: same membership/cost contract as kmeans_assign, so
+    // a lookup or tiebreak drift hash-fails here. The name predates the
+    // shared kernel (it once checked a triangle-pruned index) and stays,
+    // so Verify outputs stay comparable across versions.
     "assign_pruned" -> ((s, dir) => {
       val grid: IndexedSeq[(Long, Array[Double])] =
         (0 until 1024).map(j => j.toLong ->
           Array((j % 32).toDouble * 2, 900.0 + (j / 32).toDouble * 4))
-      graft.dbscan.Dbscan.withPrunedNearest(pts(s, dir), "qi", grid,
-          "cluster", "d")
+      graft.dbscan.Dbscan.withNearest(pts(s, dir), "qi", grid, "cluster", "d")
         .groupBy("cluster")
         .agg(count(lit(1)).as("n_members"), round(sum("d"), 2).as("cost"))
         .orderBy("cluster")
@@ -1319,7 +1319,7 @@ object ClusterQueries {
       """SELECT CAST(count(*) AS BIGINT) AS n_assigned,
         |  CAST(8 AS BIGINT) AS n_clusters,
         |  CAST(1 AS INT) AS labels_valid FROM part""".stripMargin,
-    // pruned-exact argmin over the deterministic 1024-centroid grid —
+    // DBSCAN noise-assign argmin over the deterministic 1024-centroid grid —
     // identical contract to kmeans_assign's oracle; the grid is
     // generated from the same integer formulas on both sides so the
     // doubles are bit-equal

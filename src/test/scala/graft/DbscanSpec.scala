@@ -336,10 +336,55 @@ class DbscanSpec extends GraftSuite {
       info(s"$mode: run $run, sweep $sweep SQL actions")
       // A pass reads its per-ε numbers from the centroid collect and one
       // stats action. Three actions (stats, centroid collect, noise error)
-      // took 16 for a run and 18 for this sweep in both modes.
+      // took 16 for a run and 18 for this sweep in both modes. The sweep
+      // reads the vector length off its id-range action; a separate
+      // `dim` action per pass took 17.
       assert(run <= 15, s"$mode run: $run SQL actions")
-      assert(sweep <= 17, s"$mode sweep: $sweep SQL actions")
+      assert(sweep <= 16, s"$mode sweep: $sweep SQL actions")
     }
+  }
+
+  test("noise takes the brute-force nearest centroid under Long component " +
+      "ids above Int.MaxValue") {
+    // The noise assign labels centroids by position in the kernel and
+    // maps the winning position back to its Long component id. Sparse
+    // ids put every component above the Int range. Two mirror-image
+    // blobs have centroids (1001, 1) and (1021, 1), and the point
+    // (1011, 30) is at L1 39 from both. The right-hand blob holds the
+    // lower ids, so the tie must go to its centroid.
+    val Scale = 1000000007L
+    val mirror = for {
+      (x0, base) <- Seq((1000.0, 409L), (1020.0, 400L))
+      i <- 0 until 3; j <- 0 until 3
+    } yield (base + i * 3 + j, Array(x0 + i, j.toDouble))
+    val tie = (418L, Array(1011.0, 30.0))
+    val pts = sevenBlobs.union((mirror :+ tie).toDF("id", "qi"))
+      .select(((col("id") + 3L) * Scale).as("id"), col("qi"))
+    val (_, best) = Dbscan.sweep(pts, "id", "qi", epsRange = Seq(2.0, 3.0),
+      minPts = 5, k = 5)
+    val (_, m) = best.getOrElse(fail("the blobs must have a winner"))
+    try {
+      val cents = m.centroids.select("component", "centroid")
+        .as[(Long, Seq[Double])].collect().toSeq
+      assert(cents.forall(_._1 > Int.MaxValue), s"components: ${cents.map(_._1)}")
+      val noise = m.assignments.where(col("is_noise"))
+        .select("id", "qi", "an_qi", "an_err")
+        .as[(Long, Seq[Double], Seq[Double], Double)].collect()
+      assert(noise.exists(_._1 == (tie._1 + 3L) * Scale),
+        "the tie point must be noise")
+      for ((id, qi, anQi, anErr) <- noise) {
+        val (d, comp) = cents.map { case (c, cent) =>
+          (qi.indices.map(i => math.abs(qi(i) - cent(i))).sum, c)
+        }.min
+        val cent = cents.find(_._1 == comp).get._2
+        assert(anQi == cent && anErr == d,
+          s"noise $id: ($anQi, $anErr) != component $comp ($cent, $d)")
+        if (id == (tie._1 + 3L) * Scale)
+          assert(anQi == Seq(1021.0, 1.0) && anErr == 39.0 &&
+            cents.exists(_._2 == Seq(1001.0, 1.0)),
+            s"tie went to component $comp ($anQi, $anErr)")
+      }
+    } finally m.unpersist()
   }
 
   test("sweep on empty input returns zero records, no exception") {

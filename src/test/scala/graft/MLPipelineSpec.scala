@@ -154,11 +154,12 @@ class MLPipelineSpec extends GraftSuite {
       st.getOrDefault(st.minPts) == MinPts)
   }
 
-  test("dbscan transform: pruned argmin == exhaustive nearest_centroids scan") {
-    // transform scores unfitted rows with the triangle-inequality-pruned
-    // exact argmin; an exhaustive nearest_centroids scan over the same
-    // matrix (ties → lowest component id) is the oracle, and the plan
-    // must hold NO rows x k join
+  test("dbscan transform: one nearest_centroids projection, no rows x k join") {
+    // transform scores unfitted rows with the shared nearest_centroids
+    // kernel plus a position → component id lookup; the kernel over the
+    // same matrix, mapped through the model's own id list (ties → lowest
+    // component id), is the oracle, and the plan must hold NO rows x k
+    // join
     val model = new GraftDbscan().setIdCol("id").setFeaturesCol("features")
       .setEps(Eps).setMinPts(MinPts).fit(assembled)
     assert(model.centroids.nonEmpty)
@@ -177,23 +178,23 @@ class MLPipelineSpec extends GraftSuite {
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
-      s"pruned path still materializes rows x k:\n$plan")
-    assert(plan.contains("pruned_nearest"), "pruned kernel not in the plan")
+      s"transform still materializes rows x k:\n$plan")
+    assert(plan.contains("nearest_centroids"), "argmin kernel not in the plan")
     val labels = out.select("id", "prediction").as[(Long, Option[Long])]
       .collect().toMap
     // fitted ids keep their DBSCAN label; only unfitted ids are argmin'd
     assert(labels == fitted, "transform changed a fitted id's label")
-    // unseen rows: the pruned argmin agrees with the exhaustive scan
+    // unseen rows: the transform's argmin agrees with the oracle
     val unseen = assembled.select(col("x0"), col("x1"))
       .withColumn("id", monotonically_increasing_id() + 9000000L)
-    val viaPruned = model.transform(
+    val viaTransform = model.transform(
       new VectorAssembler().setInputCols(Array("x0", "x1"))
         .setOutputCol("features").transform(unseen))
       .select("x0", "x1", "prediction").as[(Double, Double, Option[Long])]
       .collect().map(r => (r._1, r._2) -> r._3).toMap
     val byPoint = assembled.select("id", "x0", "x1").as[(Long, Double, Double)]
       .collect().map(r => (r._2, r._3) -> Option(exhaustive(r._1))).toMap
-    assert(viaPruned == byPoint, "pruned argmin diverged from the exhaustive scan")
+    assert(viaTransform == byPoint, "transform argmin diverged from the kernel")
     model.release()
   }
 

@@ -248,131 +248,6 @@ class PropertySpec extends GraftSuite {
     }
   }
 
-  test("pruned nearest-centroid equals the exhaustive scan on random matrices (property)") {
-    // the noise-assign kernel: triangle-inequality pruning must be
-    // EXACT — same component id AND bit-equal distance as a full scan —
-    // for any k (including k < 4 where no real grouping exists), any
-    // dim, clustered or uniform centroids, and duplicate centroids
-    // (ties must break to the lowest component id in both forms)
-    val gen = for {
-      k <- Gen.oneOf(1, 2, 3, 7, 64, 300)
-      dims <- Gen.choose(1, 8)
-      clustered <- Gen.oneOf(true, false)
-      seed <- Gen.choose(0L, 9999L)
-    } yield (k, dims, clustered, seed)
-    samples(gen, 10).foreach { case (k, dims, clustered, seed) =>
-      val rnd = new scala.util.Random(seed)
-      def vec(): Array[Double] =
-        if (clustered) {
-          val c = rnd.nextInt(5) * 50.0
-          Array.fill(dims)(c + rnd.nextDouble() * 4)
-        } else Array.fill(dims)(rnd.nextDouble() * 200 - 100)
-      val base = IndexedSeq.tabulate(k)(i => (i * 3L + 1) -> vec())
-      // plant a duplicate centroid under a HIGHER id: the lower id must win
-      val cents = if (k > 1) base :+ ((k * 3L + 100) -> base(k / 2)._2.clone())
-                  else base
-      val sorted = cents.sortBy(_._1)
-      val idx = new graft.functions.PrunedCentroidIndex(
-        sorted.map(_._1).toArray, sorted.flatMap(_._2).toArray, dims)
-      (0 until 40).foreach { _ =>
-        val x = vec()
-        val exp = sorted.map { case (id, c) =>
-          (c.indices.map(i => math.abs(x(i) - c(i))).sum, id)
-        }.min
-        val got = idx.nearest(
-          org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(x))
-        assert(got.getLong(0) == exp._2 && got.getDouble(1) == exp._1,
-          s"pruned (${got.getLong(0)}, ${got.getDouble(1)}) != exhaustive " +
-            s"$exp at k=$k dims=$dims clustered=$clustered seed=$seed")
-      }
-    }
-  }
-
-  test("pruned nearest matches the kernel bit-for-bit on ragged and NaN input") {
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    // the pruned argmin and the exhaustive kernel must agree on EVERY
-    // input the kernel accepts, including the edges:
-    //  - ragged queries (shorter than dim): the kernel compares over
-    //    min(numElements, dim) and ignores the centroid tail
-    //  - NaN in the query: every comparison is false, so the kernel's
-    //    unconditional first insert wins — the pruned path must not
-    //    fabricate a sentinel id
-    //  - NaN in the CENTROID MATRIX: a NaN-distance first centroid
-    //    blocks all later inserts in the kernel; the pruned groups would
-    //    be NaN-centered and unprunable, so the index must detect the
-    //    degenerate matrix and fall back to the kernel's scan order
-    def assertParity(ids: Array[Long], flat: Array[Double], dim: Int,
-                     x: Array[Double], label: String): Unit = {
-      val idx = new graft.functions.PrunedCentroidIndex(ids, flat, dim)
-      val kern = graft.functions.VecKernels.topCentroids(
-        ArrayData.toArrayData(x), ids.map(_.toInt), flat, dim,
-        cosine = false, k = 1).getStruct(0, 2)
-      val got = idx.nearest(ArrayData.toArrayData(x))
-      assert(got.getLong(0) == kern.getInt(0).toLong,
-        s"$label: pruned id ${got.getLong(0)} != kernel ${kern.getInt(0)}")
-      assert(java.lang.Double.doubleToLongBits(got.getDouble(1)) ==
-          java.lang.Double.doubleToLongBits(kern.getDouble(1)),
-        s"$label: pruned d ${got.getDouble(1)} != kernel ${kern.getDouble(1)}")
-    }
-    val rnd = new scala.util.Random(11)
-    val dim = 6
-    def matrix(k: Int): (Array[Long], Array[Double]) = {
-      val ids = Array.tabulate(k)(i => i * 3L + 1)
-      val flat = Array.fill(k * dim)(rnd.nextInt(5) * 50.0 + rnd.nextDouble() * 4)
-      (ids, flat)
-    }
-    val (ids, flat) = matrix(64)
-    // ragged: every truncation length incl. the empty query (all-ties)
-    Seq(0, 1, 3, dim - 1, dim).foreach { n =>
-      (0 until 20).foreach { i =>
-        assertParity(ids, flat,
-          dim, Array.fill(n)(rnd.nextDouble() * 200), s"ragged n=$n #$i")
-      }
-    }
-    // NaN in the query, at each position, full-length and ragged
-    (0 until dim).foreach { p =>
-      val x = Array.fill(dim)(rnd.nextDouble() * 200); x(p) = Double.NaN
-      assertParity(ids, flat, dim, x, s"query NaN at $p")
-      if (p < 3) assertParity(ids, flat, dim, x.take(3), s"ragged NaN at $p")
-    }
-    // NaN in the matrix: first centroid (kernel keeps it forever) and a
-    // later one (kernel never admits it)
-    Seq(0, 17, 63).foreach { c =>
-      val poisoned = flat.clone(); poisoned(c * dim + 2) = Double.NaN
-      (0 until 20).foreach { i =>
-        assertParity(ids, poisoned, dim,
-          Array.fill(dim)(rnd.nextDouble() * 200), s"centroid NaN c=$c #$i")
-      }
-    }
-  }
-
-  test("pruned index build is shared per JVM across content-equal copies") {
-    // each task deserializes its own index instance, so the Lloyd build
-    // must be cached by matrix CONTENT — content-equal instances get the
-    // same Built (reference equality), distinct matrices get their own
-    val rnd = new scala.util.Random(23)
-    val flat = Array.fill(32 * 4)(rnd.nextDouble() * 100)
-    val ids = Array.tabulate(32)(_.toLong)
-    val a = new graft.functions.PrunedCentroidIndex(ids, flat, 4)
-    val b = new graft.functions.PrunedCentroidIndex(
-      ids.clone(), flat.clone(), 4)
-    assert(a.builtRef eq b.builtRef,
-      "content-equal indexes did not share one build")
-    val other = new graft.functions.PrunedCentroidIndex(
-      ids, flat.map(_ + 1.0), 4)
-    assert(!(a.builtRef eq other.builtRef),
-      "distinct matrices shared a build")
-    // a NaN-bearing (degenerate) matrix must key consistently too: the
-    // content sum is NaN, and primitive NaN equality would dodge the
-    // cache on every lookup
-    val poisoned = flat.clone(); poisoned(5) = Double.NaN
-    val d1 = new graft.functions.PrunedCentroidIndex(ids, poisoned, 4)
-    val d2 = new graft.functions.PrunedCentroidIndex(
-      ids.clone(), poisoned.clone(), 4)
-    assert(d1.builtRef eq d2.builtRef,
-      "content-equal degenerate matrices did not share one build")
-  }
-
   test("blockedSelfPairs equals the plain pair join on random skewed groups (property)") {
     // the semdedup hot-bucket guard: exact triangle blocking must emit
     // each unordered within-group pair EXACTLY once for any group-size
