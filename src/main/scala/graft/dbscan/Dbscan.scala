@@ -1,5 +1,6 @@
 package graft.dbscan
 
+import graft.core.Phase
 import graft.functions.Distances
 import graft.graph.{ConnectedComponents, GraphAlgs}
 import graft.operators.NeighborJoin
@@ -143,18 +144,24 @@ object Dbscan {
     * centroid collect plus one action. `pts` is (id, qi) with unique
     * ids and `dim`-long vectors; the caller reads `dim` ([[sweep]] from
     * the id-range action it runs anyway). Records carry `seconds = 0`.
+    * Jobs are tagged `dbscan.core` (the graph's set-up, which runs the
+    * ε-join and the core rule), `cc.round.<i>`, `dbscan.centroids` and
+    * `dbscan.stats`.
     */
   private def cluster(pts: DataFrame, dim: Int, tagged: DataFrame,
                       blocks: Blocks, minPts: Int, k: Int,
                       mode: ClusterMode): Clustered = {
+    val sc = pts.sparkSession.sparkContext
     val pairs = tagged.select(
       blocks.vertex(col("ei"), col("a_id")).as("a_id"), col("a_w"),
       blocks.vertex(col("ei"), col("b_id")).as("b_id"), col("b_w"))
 
     val edges = coreEdges(pairs, minPts)
-    val comp = mode match {
-      case Cc => ConnectedComponents.run(edges)
-      case Scc => GraphAlgs.dbscanScc(edges)
+    val comp = Phase(sc, "dbscan.core") {
+      mode match {
+        case Cc => ConnectedComponents.run(edges)
+        case Scc => GraphAlgs.dbscanScc(edges)
+      }
     }
 
     // Every point appears in every block. A vertex outside the edge graph
@@ -201,9 +208,11 @@ object Dbscan {
       // block's row count is its cluster count. Components ascend per
       // block — [[withNearest]]'s precondition (collect order is
       // arbitrary).
-      val byBlock = centroids
-        .select(blocks.of("component"), col("component"), col("centroid"))
-        .collect().groupBy(_.getInt(0))
+      val byBlock = Phase(sc, "dbscan.centroids") {
+        centroids
+          .select(blocks.of("component"), col("component"), col("centroid"))
+          .collect()
+      }.groupBy(_.getInt(0))
         .map { case (ei, rows) =>
           ei -> rows.map(r => (r.getLong(1), r.getSeq[Double](2).toArray))
             .sortBy(_._1).toIndexedSeq
@@ -229,16 +238,18 @@ object Dbscan {
       // join (no null-keyed noise rows ever enter a join — a
       // component=null hot key would hash to one task at scale); the noise
       // numbers are read off the very `nearest` rows the model publishes.
-      val stats = labeled.where(col("component").isNotNull)
-        .join(centroids, "component")
-        .groupBy(blocks.of("component").as("ei"))
-        .agg(sum(Distances.l1(col("qi"), col("centroid"))).as("vd"))
-        .select(col("ei"), lit("ce").as("m"), lit(0L).as("vl"), col("vd"))
-        .unionByName(nearest.reduce(_ unionByName _)
-          .groupBy(blocks.of("id").as("ei"))
-          .agg(count(lit(1)).as("vl"), sum("an_err").as("vd"))
-          .select(col("ei"), lit("nn").as("m"), col("vl"), col("vd")))
-        .collect().map(r => (r.getString(1), r.getInt(0)) -> r).toMap
+      val stats = Phase(sc, "dbscan.stats") {
+        labeled.where(col("component").isNotNull)
+          .join(centroids, "component")
+          .groupBy(blocks.of("component").as("ei"))
+          .agg(sum(Distances.l1(col("qi"), col("centroid"))).as("vd"))
+          .select(col("ei"), lit("ce").as("m"), lit(0L).as("vl"), col("vd"))
+          .unionByName(nearest.reduce(_ unionByName _)
+            .groupBy(blocks.of("id").as("ei"))
+            .agg(count(lit(1)).as("vl"), sum("an_err").as("vd"))
+            .select(col("ei"), lit("nn").as("m"), col("vl"), col("vd")))
+          .collect()
+      }.map(r => (r.getString(1), r.getInt(0)) -> r).toMap
       val nNoise = blocks.eps.indices.map(ei =>
         stats.get(("nn", ei)).fold(0L)(_.getLong(2)))
 
@@ -278,58 +289,59 @@ object Dbscan {
     * and every other frame the pass persisted is released before this
     * returns, on failure too — only after the model's frames are
     * materialized, so nothing published recomputes from a released frame.
+    * Its jobs are tagged `dbscan.publish`.
     */
   private def publish(c: Clustered, ei: Int, points: DataFrame,
                       idCol: String, qiCol: String,
-                      weightCol: Option[String]): DbscanModel = {
-    val blocks = c.blocks
-    // a one-block pass's centroids are already the model's
-    val cents =
-      if (blocks.span == 0) c.centroids
-      else c.centroids.where(blocks.of("component") === ei)
-        .select(blocks.input(ei, col("component")).as("component"),
-          col("centroid"), col("n_members"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    var assignments: DataFrame = null
-    try {
-      val memberAssigned = c.labeled
-        .where(col("component").isNotNull && blocks.of("id") === ei)
-        .select(blocks.input(ei, col("id")).as("id"), col("qi"),
-          blocks.input(ei, col("component")).as("component"))
-        .join(cents, "component")
-        .select(col("id"), col("qi"), col("component"),
-          col("centroid").as("an_qi"),
-          Distances.l1(col("qi"), col("centroid")).as("an_err"))
-      val noiseAssigned = c.nearest(ei)
-        .select(blocks.input(ei, col("id")).as("id"), col("qi"),
-          blocks.input(ei, col("cc")).as("cc"), col("an_err"))
-        .join(cents.select(col("component").as("cc"),
-          col("centroid").as("an_qi")), Seq("cc"), "left")
-        .select(col("id"), col("qi"), lit(null).cast("long").as("component"),
-          col("an_qi"), col("an_err"))
+                      weightCol: Option[String]): DbscanModel =
+    Phase(points.sparkSession.sparkContext, "dbscan.publish") {
+      val blocks = c.blocks
+      // a one-block pass's centroids are already the model's
+      val cents =
+        if (blocks.span == 0) c.centroids
+        else c.centroids.where(blocks.of("component") === ei)
+          .select(blocks.input(ei, col("component")).as("component"),
+            col("centroid"), col("n_members"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+      var assignments: DataFrame = null
+      try {
+        val memberAssigned = c.labeled
+          .where(col("component").isNotNull && blocks.of("id") === ei)
+          .select(blocks.input(ei, col("id")).as("id"), col("qi"),
+            blocks.input(ei, col("component")).as("component"))
+          .join(cents, "component")
+          .select(col("id"), col("qi"), col("component"),
+            col("centroid").as("an_qi"),
+            Distances.l1(col("qi"), col("centroid")).as("an_err"))
+        val noiseAssigned = c.nearest(ei)
+          .select(blocks.input(ei, col("id")).as("id"), col("qi"),
+            blocks.input(ei, col("cc")).as("cc"), col("an_err"))
+          .join(cents.select(col("component").as("cc"),
+            col("centroid").as("an_qi")), Seq("cc"), "left")
+          .select(col("id"), col("qi"), lit(null).cast("long").as("component"),
+            col("an_qi"), col("an_err"))
 
-      val extras = points.columns.toSeq
-        .filterNot(n => n == idCol || n == qiCol || weightCol.contains(n))
-      val base = memberAssigned.unionByName(noiseAssigned)
-        .withColumn("is_noise", col("component").isNull)
-      assignments = (if (extras.isEmpty) base
-        else base.join(
-          points.select((col(idCol).cast("long").as("id") +: extras.map(col)): _*),
-          "id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if (cents ne c.centroids) cents.count()
-      assignments.count()
-      val r = c.records(ei)
-      DbscanModel(assignments, cents, r.nClusters, r.nNoise, r.clusterError,
-        r.noiseError)
-    } catch { case t: Throwable =>
-      if (assignments != null) assignments.unpersist()
-      cents.unpersist(); throw t
-    } finally {
-      c.labeled.unpersist()
-      if (cents ne c.centroids) c.centroids.unpersist()
+        val extras = points.columns.toSeq
+          .filterNot(n => n == idCol || n == qiCol || weightCol.contains(n))
+        val base = memberAssigned.unionByName(noiseAssigned)
+          .withColumn("is_noise", col("component").isNull)
+        assignments = (if (extras.isEmpty) base
+          else base.join(points.select(
+            (col(idCol).cast("long").as("id") +: extras.map(col)): _*), "id"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        if (cents ne c.centroids) cents.count()
+        assignments.count()
+        val r = c.records(ei)
+        DbscanModel(assignments, cents, r.nClusters, r.nNoise, r.clusterError,
+          r.noiseError)
+      } catch { case t: Throwable =>
+        if (assignments != null) assignments.unpersist()
+        cents.unpersist(); throw t
+      } finally {
+        c.labeled.unpersist()
+        if (cents ne c.centroids) c.centroids.unpersist()
+      }
     }
-  }
 
   /** Run DBSCAN over points identified by a unique Long `idCol` with
     * `array<double>` coordinates `qiCol`: one ε-block of [[cluster]],
@@ -344,6 +356,10 @@ object Dbscan {
     *   output over (id, qi, w) for the SAME points and eps) — callers that
     *   already hold the ε-graph (e.g. the gate registry's per-dir cache)
     *   pass it here so the join isn't rebuilt; it is NOT unpersisted.
+    *
+    * The `dim` action is tagged `dbscan.input`; [[cluster]] and
+    * [[publish]] tag the rest (the persisted ε-join runs in the first
+    * action that reads it, `dbscan.core`).
     */
   def run(points: DataFrame, idCol: String, qiCol: String, eps: Double,
           minPts: Int, k: Int, mode: ClusterMode = Cc,
@@ -359,7 +375,9 @@ object Dbscan {
     val pairs = pairsOpt.getOrElse(NeighborJoin
       .epsJoinGrid(pts, "id", "qi", eps, blockDims)
       .persist(StorageLevel.MEMORY_AND_DISK))
-    val dim = pts.select(size(col("qi"))).head().getInt(0)
+    val dim = Phase(points.sparkSession.sparkContext, "dbscan.input") {
+      pts.select(size(col("qi"))).head().getInt(0)
+    }
     val c = try cluster(pts.select("id", "qi"), dim,
         pairs.select(lit(0).as("ei"), col("a_id"), col("a_w"), col("b_id"),
           col("b_w")),
@@ -408,6 +426,10 @@ object Dbscan {
     * are released. Only when the namespaced ids would overflow a Long
     * does the same pass run once per ε, keeping only the best pass so
     * far.
+    *
+    * The id-range action is tagged `dbscan.input`; [[cluster]] and
+    * [[publish]] tag the rest (the persisted ε-join runs in the first
+    * action that reads it, `dbscan.core`).
     */
   def sweep(points: DataFrame, idCol: String, qiCol: String,
             epsRange: Seq[Double], minPts: Int, k: Int,
@@ -421,7 +443,9 @@ object Dbscan {
     // empty-input check BEFORE any head() on the points — head() on an
     // empty Dataset throws, the agg always returns one row. The same
     // action sizes the centroid aggregate.
-    val idRow = pts.agg(min("id"), max("id"), max(size(col("qi")))).head()
+    val idRow = Phase(points.sparkSession.sparkContext, "dbscan.input") {
+      pts.agg(min("id"), max("id"), max(size(col("qi")))).head()
+    }
     if (idRow.isNullAt(0))
       return (epsRange.map(e => SweepRecord(e, 0, 0, 0.0, 0.0, 0.0, 0.0)), None)
     val (minId, maxId, dim) =

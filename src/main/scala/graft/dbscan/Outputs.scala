@@ -1,5 +1,6 @@
 package graft.dbscan
 
+import graft.core.Phase
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,21 +38,26 @@ object Outputs {
     a.select(struct(ptAll: _*).as("pt"), struct(anAll: _*).as("an_pt"))
   }
 
-  /** JSON sink, overwrite — S2 (DBSCAN.py:80-84). */
+  /** JSON sink, overwrite — S2 (DBSCAN.py:80-84); jobs tagged
+    * `sink.json`. */
   def writeAnonymizedJson(model: DbscanModel, dim: Int, path: String,
                           labelCol: Option[String] = None): Unit =
-    anonymizedPairs(model, dim, labelCol)
-      .write.mode(SaveMode.Overwrite).json(path)
+    Phase(model.assignments.sparkSession.sparkContext, "sink.json") {
+      anonymizedPairs(model, dim, labelCol)
+        .write.mode(SaveMode.Overwrite).json(path)
+    }
 
   /** Parquet sink, overwrite — S3 (k-means.ipynb:80-82): one row per input
-    * point holding its cluster's centroid under the given column names. */
+    * point holding its cluster's centroid under the given column names;
+    * jobs tagged `sink.parquet`. */
   def writeKmeansParquet(model: graft.kmeans.KMeansModel, headers: Seq[String],
-                         path: String): Unit = {
-    val dim = headers.length
-    graft.kmeans.ConstrainedKMeans.anonymized(model, dim)
-      .select((0 until dim).map(i => element_at(col("an_qi"), i + 1).as(headers(i))): _*)
-      .write.mode(SaveMode.Overwrite).parquet(path)
-  }
+                         path: String): Unit =
+    Phase(model.assignment.sparkSession.sparkContext, "sink.parquet") {
+      val dim = headers.length
+      graft.kmeans.ConstrainedKMeans.anonymized(model, dim)
+        .select((0 until dim).map(i => element_at(col("an_qi"), i + 1).as(headers(i))): _*)
+        .write.mode(SaveMode.Overwrite).parquet(path)
+    }
 
   /** Driver-local sweep metrics CSV — S4: header + one line per ε,
     * rewritten wholesale each call like outputRecord (DBSCAN.py:135-143).

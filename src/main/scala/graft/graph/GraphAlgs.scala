@@ -12,35 +12,18 @@ import org.apache.spark.sql.functions.{coalesce, col}
   */
 object GraphAlgs {
 
-  /** Rows per GraphX edge partition. Pregel pays per-partition,
-    * per-iteration fixed costs (task scheduling, vertex/edge co-location
-    * joins), so the edge RDD is sized by DATA VOLUME — a 100 TB graph
-    * gets thousands of ~2M-row partitions instead of inheriting whatever
-    * partitioning the upstream DataFrame happened to have. The partition
-    * count is FLOORED at the session's default parallelism (round 16):
-    * round 15's pure data sizing collapsed the gate-scale edge list to 1
-    * partition, serializing every Pregel round onto one core — the
-    * driver measured cc_graphx 6.97 → 10.06 s at 32 cores and 13.44 s at
-    * 8 — so a graph smaller than cores × 2M rows now simply keeps its
-    * existing partitions (capped at parallelism), while at scale
-    * ceil(n / 2M) dominates the floor and the data sizing takes over.
-    * The count that sizes it is one cheap job over the (usually
-    * memoized) edge frame; `coalesce` keeps it shuffle-free. Results are
-    * partitioning-independent (component = min vertex id), cross-checked
-    * in ConnectedComponentsSpec. */
-  private val EdgeRowsPerPartition = 2000000L
-
+  /** The edge list as a GraphX edge RDD of at most default-parallelism
+    * partitions. Pregel pays per-partition, per-iteration fixed costs, so
+    * more partitions than cores only add overhead; fewer would serialize
+    * rounds onto fewer cores (a 1-partition edge list took cc_graphx from
+    * 6.97 to 10.06 s at 32 cores). `coalesce` keeps it shuffle-free.
+    * Results are partitioning-independent (component = min vertex id),
+    * cross-checked in ConnectedComponentsSpec. */
   private def toEdgeRdd(edges: DataFrame) = {
     val rows = edges.selectExpr("CAST(src AS LONG)", "CAST(dst AS LONG)")
-    val n = rows.count()
     val rdd = rows.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    val byData = math.max(1L, (n + EdgeRowsPerPartition - 1) / EdgeRowsPerPartition)
-      .min(Int.MaxValue.toLong).toInt
-    val floor = math.min(
-      rows.sparkSession.sparkContext.defaultParallelism,
-      rdd.getNumPartitions)
-    val parts = math.max(byData, floor)
-    if (rdd.getNumPartitions > parts) rdd.coalesce(parts) else rdd
+    val parallelism = rows.sparkSession.sparkContext.defaultParallelism
+    if (rdd.getNumPartitions > parallelism) rdd.coalesce(parallelism) else rdd
   }
 
   /** Undirected connected components; returns (id, component) for vertices
@@ -60,15 +43,19 @@ object GraphAlgs {
     * iterative SCC (minutes at sf0.1) with two joins + large-star/small-star
     * CC, and is exact (it matched the mutual-reachability SQL oracle that
     * bounded-iteration SCC only happens to match on shallow graphs).
+    * The core-core subgraph's set-up (which the components' first
+    * checksum runs) is tagged `scc.mutual`; the returned relabelling is
+    * lazy and runs under its reader's tag.
     */
-  def dbscanScc(edges: DataFrame): DataFrame = {
-    val cores = edges.select(col("src")).distinct()
-    val mutual = edges.join(cores.withColumnRenamed("src", "c"),
-      edges("dst") === col("c"), "left_semi")
-    val cc = ConnectedComponents.run(mutual)
-    val verts = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct()
-    verts.join(cc, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-  }
+  def dbscanScc(edges: DataFrame): DataFrame =
+    graft.core.Phase(edges.sparkSession.sparkContext, "scc.mutual") {
+      val cores = edges.select(col("src")).distinct()
+      val mutual = edges.join(cores.withColumnRenamed("src", "c"),
+        edges("dst") === col("c"), "left_semi")
+      val cc = ConnectedComponents.run(mutual)
+      val verts = edges.select(col("src").as("id"))
+        .union(edges.select(col("dst").as("id"))).distinct()
+      verts.join(cc, Seq("id"), "left")
+        .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+    }
 }

@@ -1,10 +1,14 @@
 package graft.kmeans
 
+import graft.core.Phase
 import graft.functions.Distances
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.util.{Failure, Try}
 
 /** One fitted constrained-k-means model. `assignment` is (cluster, id, qi);
   * `centroids` are the post-fit per-cluster means; `cost` is the total L1
@@ -99,7 +103,9 @@ object ConstrainedKMeans {
   }
 
   private def dimOf(pts: DataFrame): Int =
-    pts.select(size(col("qi"))).head().getInt(0)
+    Phase(pts.sparkSession.sparkContext, "kmeans.input") {
+      pts.select(size(col("qi"))).head().getInt(0)
+    }
 
   /** A round's assignment: every available point's nearest available
     * centroid (`cluster`, at L1 distance `d`), carrying (id, qi, cost). */
@@ -137,16 +143,23 @@ object ConstrainedKMeans {
     * `dim`-long qi vectors — the seam [[sweep]] shares ONE cached point set
     * through (Spark's CacheManager keys persists by logical plan, so
     * per-fit persists of the same projection would thrash each other's
-    * cache under the concurrent sweep). */
+    * cache under the concurrent sweep).
+    *
+    * Jobs are tagged on the calling thread (a [[sweep]] pool thread runs
+    * its fit's jobs): `kmeans.init`, `kmeans.lloyd.<i>` for iteration i,
+    * `kmeans.repair.<i>.<r>` for its r-th repair round and `kmeans.cost`
+    * for the last iteration's cost pass. */
   private def fitOn(pts: DataFrame, dim: Int, nClusters: Int, kAnon: Int,
                     seed: Long, maxLloyd: Int, maxRepair: Int): KMeansModel = {
+    val sc = pts.sparkSession.sparkContext
     // Random initial centroids = a seeded sample of the points
     // (rdd.takeSample(False, want_cluster), k-means.ipynb; we add the seed
     // the reference lacked, SURVEY §2.10 C5).
-    var centroids: Map[Int, Array[Double]] =
+    var centroids: Map[Int, Array[Double]] = Phase(sc, "kmeans.init") {
       pts.select("qi").rdd.map(_.getSeq[Double](0).toArray)
         .takeSample(withReplacement = false, nClusters, seed)
         .zipWithIndex.map { case (c, i) => i -> c }.toMap
+    }
 
     var best: KMeansModel = null
     def settle(m: KMeansModel): Unit =
@@ -186,37 +199,43 @@ object ConstrainedKMeans {
       var repairing = true
       while (repairing) {
         repairs += 1
-        val assigned = assign(avail, availCents).localCheckpoint(eager = false)
-        roundCks ::= assigned
-        val stats = clusterStats(assigned, dim)
-        if (pending != null) {
-          // the first round read assignment(i-1) with its costs
-          settle(pending.copy(cost = totalCost(stats)))
-          pending = null
-        }
-        // seeded-empty clusters (sc.parallelize union) = available clusters
-        // with zero assigned rows
-        val deficient = availCents.keySet
-          .filter(c => stats.get(c).fold(0L)(_._1) < kAnon)
-
-        if (deficient.size > 1 && repairs < maxRepair) {
-          // keep the k nearest of every cluster (deficient ones keep all)
-          val w = Window.partitionBy("cluster").orderBy(col("d"), col("id"))
-          val ranked = assigned.withColumn("rn", row_number().over(w))
-          val kept = ranked.where(col("rn") <= kAnon).select("cluster", "id", "qi")
-          completed = if (completed == null) kept else completed.unionByName(kept)
-          if (repairs % 8 == 0) {
-            completed = completed.localCheckpoint()
-            roundCks ::= completed
+        // round 1 is the iteration's assignment, every later one a repair
+        val round =
+          if (repairs == 1) s"kmeans.lloyd.$iters"
+          else s"kmeans.repair.$iters.${repairs - 1}"
+        Phase(sc, round) {
+          val assigned = assign(avail, availCents).localCheckpoint(eager = false)
+          roundCks ::= assigned
+          val stats = clusterStats(assigned, dim)
+          if (pending != null) {
+            // the first round read assignment(i-1) with its costs
+            settle(pending.copy(cost = totalCost(stats)))
+            pending = null
           }
-          avail = ranked.where(col("rn") > kAnon).select("id", "qi", "cost")
-          availCents = availCents.view.filterKeys(deficient).toMap
-        } else {
-          val fin = assigned.select("cluster", "id", "qi")
-          if (completed == null) unrepaired = stats
-          completed = if (completed == null) fin
-            else completed.unionByName(fin)
-          repairing = false
+          // seeded-empty clusters (sc.parallelize union) = available clusters
+          // with zero assigned rows
+          val deficient = availCents.keySet
+            .filter(c => stats.get(c).fold(0L)(_._1) < kAnon)
+
+          if (deficient.size > 1 && repairs < maxRepair) {
+            // keep the k nearest of every cluster (deficient ones keep all)
+            val w = Window.partitionBy("cluster").orderBy(col("d"), col("id"))
+            val ranked = assigned.withColumn("rn", row_number().over(w))
+            val kept = ranked.where(col("rn") <= kAnon).select("cluster", "id", "qi")
+            completed = if (completed == null) kept else completed.unionByName(kept)
+            if (repairs % 8 == 0) {
+              completed = completed.localCheckpoint()
+              roundCks ::= completed
+            }
+            avail = ranked.where(col("rn") > kAnon).select("id", "qi", "cost")
+            availCents = availCents.view.filterKeys(deficient).toMap
+          } else {
+            val fin = assigned.select("cluster", "id", "qi")
+            if (completed == null) unrepaired = stats
+            completed = if (completed == null) fin
+              else completed.unionByName(fin)
+            repairing = false
+          }
         }
       }
 
@@ -229,7 +248,7 @@ object ConstrainedKMeans {
           val cents = unrepaired.map { case (c, (n, s, _)) => c -> s.map(_ / n) }
           pending = KMeansModel(completed, cents, Double.NaN, iters)
           cents
-        } else {
+        } else Phase(sc, s"kmeans.lloyd.$iters") {
           // lineage cut: LAZY, materialized by the aggregation below
           val ck = completed.localCheckpoint(eager = false)
           // new centroid = per-dimension mean over members (calculate_centroid)
@@ -252,7 +271,7 @@ object ConstrainedKMeans {
       centroids = newCentroids
     }
     // the last iteration's cost takes one more pass
-    if (pending != null) settleNow(pending)
+    if (pending != null) Phase(sc, "kmeans.cost")(settleNow(pending))
     best.copy(lloydIters = iters)
   }
 
@@ -285,7 +304,9 @@ object ConstrainedKMeans {
     * every fit is internally deterministic (seeded init, stable sorts),
     * and the argmin reduction below walks the models in the same
     * (clusterRange × restart) order as the old sequential loop, with the
-    * same strict-less tiebreak. */
+    * same strict-less tiebreak. A failed fit fails the sweep only once
+    * every fit has ended: the finished models are released and the shared
+    * points unpersisted, so no fit's caches outlive the sweep. */
   def sweep(points: DataFrame, idCol: String, qiCol: String,
             clusterRange: Seq[Int], restarts: Int, kAnon: Int, seed: Long,
             maxLloyd: Int = 20): KMeansModel = {
@@ -296,23 +317,27 @@ object ConstrainedKMeans {
     val pts = points.select(col(idCol).cast("long").as("id"), col(qiCol).as("qi"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val models: Seq[KMeansModel] =
+    val fits: Seq[Try[KMeansModel]] =
       try {
         val dim = dimOf(pts) // once for every fit
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
         val futs = combos.map { case (c, r) =>
-          scala.concurrent.Future {
+          Future {
             fitOn(pts, dim, c, kAnon, seed + c * 1000 + r, maxLloyd,
               maxRepair = 100)
           }
         }
-        futs.map(f => scala.concurrent.Await.result(
-          f, scala.concurrent.duration.Duration.Inf))
+        // every fit ends before `pts` is unpersisted under it
+        futs.map(f => Try(Await.result(f, Duration.Inf)))
       } finally {
         pool.shutdown()
         pts.unpersist()
       }
+    fits.collectFirst { case Failure(t) => t }.foreach { t =>
+      fits.foreach(_.foreach(_.unpersist()))
+      throw t
+    }
+    val models = fits.map(_.get)
     var best: KMeansModel = null
     for (m <- models) {
       if (best == null || m.cost < best.cost) {

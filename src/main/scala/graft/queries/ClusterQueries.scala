@@ -172,9 +172,6 @@ object ClusterQueries {
     * eagerly checkpointed (boruvka's own per-round checkpoints release
     * everything else). */
   private[graft] val MstKey = "cluster.mst"
-  /** Dev-profiler hook ([[graft.tools.ProbeHdbscan]]) — the memoized MST. */
-  private[graft] def probeMst(s: SparkSession, dir: String): graft.graph.Mst.Forest =
-    sharedMst(s, dir)
   private def sharedMst(s: SparkSession, dir: String): graft.graph.Mst.Forest =
     QueryCache.shared(MstKey, s, dir) {
       val ew = sharedPairs(s, dir).where(col("a_id") < col("b_id"))

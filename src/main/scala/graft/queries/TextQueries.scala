@@ -170,9 +170,8 @@ object TextQueries {
   private[graft] val StreamCappedKey = "text.streamCappedPairs"
 
   /** dedup_stream_capped's deliberately tiny hot-bucket cap: below the
-    * text geometry's measured bucket maxima at every SF (3-18 members,
-    * tools/ProbeBuckets), so the overflow path carries real traffic in
-    * the gate itself. */
+    * text geometry's measured bucket maxima at every SF (3-18 members),
+    * so the overflow path carries real traffic in the gate itself. */
   private val StreamCap = 2
 
   /** The component labels over [[sharedJaccardPairs]] — dedup_groups and

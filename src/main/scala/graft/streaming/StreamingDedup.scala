@@ -64,8 +64,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * StreamingDedupSpec pins this cap-invariance at caps 1/4/64. State per
   * group is ≤ maxBucket × (band + 4) longs, per-arrival work ≤ 2·maxBucket
   * member scans. The default cap (1024) clears the measured gate-corpus
-  * maxima ~7× (sf0.1: text bucket max 18, sign-band bucket max 141 —
-  * tools/ProbeBuckets) while bounding a genuinely hot 100 TB bucket.
+  * maxima ~7× (sf0.1: text bucket max 18, sign-band bucket max 141)
+  * while bounding a genuinely hot 100 TB bucket.
   * A bootstrap bucket larger than the cap is REFUSED by default (round
   * 14): bootstrap rows never traverse the handler, so no overflow record
   * could ever be emitted for a dropped member and its future pairs would

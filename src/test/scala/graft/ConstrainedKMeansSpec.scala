@@ -113,6 +113,19 @@ class ConstrainedKMeansSpec extends GraftSuite {
     noLeak("a sweep")
   }
 
+  test("a failed fit fails the sweep without stranding any fit's caches") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // the -1 fit fails in its seeded sample; fits 5 and 6 finish
+    val e = intercept[IllegalArgumentException] {
+      ConstrainedKMeans.sweep(spread60, "id", "qi", clusterRange = Seq(5, -1, 6),
+        restarts = 1, kAnon = 8, seed = 1)
+    }
+    assert(e.getMessage.contains("Negative number of elements requested"))
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"the failed sweep left ${left.size} persisted RDDs")
+  }
+
   /** The round-1 literal-fold nearest centroid: the declarative oracle of
     * the native kernel (ties keep the lowest cluster index). */
   private def nearestCentroidFold(qi: Column,

@@ -134,8 +134,8 @@ class StreamingDedupSpec extends GraftSuite {
   }
 
   /** The sign-band keyed frame (embed_stream's geometry) — sf0.001
-    * buckets reach 45 members (tools/ProbeBuckets), so small caps
-    * genuinely saturate and the overflow policy has real witnesses. */
+    * buckets reach 45 members, so small caps genuinely saturate and the
+    * overflow policy has real witnesses. */
   private def signKeyed = graft.core.Tables.table(spark, sf0001, "embeddings")
     .select(col("vec_id").cast("long").as("id"),
       (col("vec_id") >= 250).as("isNew"),
